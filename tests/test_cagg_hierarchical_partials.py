@@ -30,10 +30,16 @@ def env(spark, sf_dir):
         group_by=["event_type"],
         counters={"cnt": {"value": "qv", "tiebreak": ["event_id"]}},
         gauges={"g": {"value": "qv", "tiebreak": ["event_id"]}},
-        stats_aggs={"st": {"value": "qv"}},
+        stats_aggs={
+            "st": {"value": "qv"},
+            "st2": {"value": "qv", "y": "CAST(event_id % 17 AS DOUBLE)"},
+        },
         time_weights={"tw": {"value": "qv", "tiebreak": ["event_id"]}},
         candlesticks={
             "ohlc": {"price": "qv", "tiebreak": ["event_id"]}
+        },
+        heartbeat_aggs={
+            "hb": {"liveness": "10 minutes", "tiebreak": ["event_id"]}
         },
     )
     hourly.refresh()
@@ -42,9 +48,13 @@ def env(spark, sf_dir):
         group_by=["event_type"],
         counters={"cnt_d": {"rollup_of": "cnt"}},
         gauges={"g_d": {"rollup_of": "g"}},
-        stats_aggs={"st_d": {"rollup_of": "st"}},
+        stats_aggs={
+            "st_d": {"rollup_of": "st"},
+            "st2_d": {"rollup_of": "st2"},
+        },
         time_weights={"tw_d": {"rollup_of": "tw"}},
         candlesticks={"ohlc_d": {"rollup_of": "ohlc"}},
+        heartbeat_aggs={"hb_d": {"rollup_of": "hb"}},
     )
     daily.refresh()
     return ts, hourly, daily
@@ -129,6 +139,32 @@ class TestHierarchicalPartialFamilies:
             for g_v, w_v in zip(got[k], want[k]):
                 assert g_v == pytest.approx(w_v, rel=1e-12), k
 
+    def test_stats2d_child_equals_parent_at_day(self, env):
+        _, hourly, daily = env
+        cols = ["n", "sum_x", "sum_y", "slope", "intercept", "covariance"]
+        want = _by_key(
+            hourly.stats2d_at_grain("st2", grain="1 day", realtime=False),
+            cols,
+        )
+        got = _by_key(daily.stats2d_at_grain("st2_d", realtime=False), cols)
+        assert set(got) == set(want) and len(got) > 0
+        for k in want:
+            for g_v, w_v in zip(got[k], want[k]):
+                assert (g_v is None and w_v is None) or g_v == pytest.approx(
+                    w_v, rel=1e-12
+                ), k
+
+    def test_heartbeat_child_equals_parent_at_day(self, env):
+        _, hourly, daily = env
+        cols = ["n", "live_us", "dead_us", "num_live_ranges", "first_us",
+                "last_us"]
+        want = _by_key(
+            hourly.heartbeat_at_grain("hb", grain="1 day", realtime=False),
+            cols,
+        )
+        got = _by_key(daily.heartbeat_at_grain("hb_d", realtime=False), cols)
+        assert got == want and len(got) > 0
+
     def test_child_serves_coarser_grain(self, env):
         # week grain from the DAILY child == week grain from the parent
         _, hourly, daily = env
@@ -146,14 +182,27 @@ class TestHierarchicalPartialFamilies:
         )
         assert got == want
 
-    def test_rollup_of_unknown_column_rejected(self, env):
+    @pytest.mark.parametrize(
+        "family",
+        [
+            "sketches", "counters", "gauges", "stats_aggs", "time_weights",
+            "candlesticks", "state_aggs", "freq_aggs", "maxn_aggs",
+            "heartbeat_aggs", "tdigest_aggs",
+        ],
+    )
+    def test_rollup_of_unknown_column_rejected(self, env, family):
+        """rollup_of must name a column of that family in the parent
+        cagg — checked at create, for a cagg parent and a plain
+        hypertable source alike, never left to fail at refresh."""
         ts, _, _ = env
-        with pytest.raises(ValueError, match="rollup_of"):
-            ts.create_cagg(
-                "bad_h", "_mat_hp", bucket_width="1 day", aggs={},
-                group_by=["event_type"],
-                counters={"x": {"rollup_of": "nope"}},
-            )
+        for source in ("_mat_hp", "events"):
+            with pytest.raises(ValueError, match="rollup_of"):
+                ts.create_cagg(
+                    "bad_h", source, bucket_width="1 day", aggs={},
+                    group_by=["event_type"],
+                    **{family: {"x": {"rollup_of": "nope"}}},
+                )
+        assert ts.catalog.continuous_agg.find_one(name="bad_h") is None
 
     def test_sql_rollup_routes_to_family(self, env):
         """CMV with rollup(cnt) over a counter-partial parent lands in

@@ -194,3 +194,27 @@ def test_max_n_by_sql_validation(spark):
             "AS SELECT time_bucket('1 hour', ts) AS bucket, "
             "max_n_by(v, dev, v) AS mx FROM m GROUP BY 1"
         )
+
+
+def test_max_n_by_sql_payload_qualifier_stripped(spark):
+    """A table-qualified payload (``x.dev`` over ``FROM m x``) resolves
+    on the unqualified frame the cagg builds its states on, like the
+    value argument."""
+    ts = TSSession(spark, tempfile.mkdtemp(prefix="ts_mxbq_"))
+    ht = ts.create_hypertable("m", "ts", chunk_interval="7 days")
+    ht.insert(spark.createDataFrame(
+        [(_ts(1, h), float(h), f"d{h}") for h in range(4)],
+        "ts timestamp, v double, dev string",
+    ))
+    ts.sql(
+        "CREATE MATERIALIZED VIEW mq WITH (timescaledb.continuous) AS "
+        "SELECT time_bucket('1 hour', x.ts) AS bucket, "
+        "max_n_by(x.v, x.dev, 2) AS mx FROM m x GROUP BY 1"
+    )
+    spec = ts.get_cagg("mq").row["maxn_aggs"]["mx"]
+    assert (spec["value"], spec["by"]) == ("v", "dev")
+    got = [
+        (r["value"], r["data"])
+        for r in ts.get_cagg("mq").max_n_at_grain("mx", grain="all").collect()
+    ]
+    assert got == [(3.0, "d3"), (2.0, "d2")]

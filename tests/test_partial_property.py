@@ -188,3 +188,166 @@ def test_maxn_by_serve_equals_raw(spark, seed):
     assert set(got) == set(want)
     for k in want:
         assert got[k] == want[k], (k, got[k], want[k])
+
+
+def _raw_day(spark, rows, col="v"):
+    from timescaledb_spark.functions.time import time_bucket
+
+    df = spark.createDataFrame(
+        rows, "ts timestamp, rid long, dev string, v double"
+    )
+    if col is not None:
+        df = df.filter(F.col(col).isNotNull())
+    return df.withColumn("day", time_bucket("1 day", "ts"))
+
+
+def _approx_eq(got, want):
+    return (got is None and want is None) or (
+        got is not None
+        and want is not None
+        and got == pytest.approx(want, rel=1e-9, abs=1e-9)
+    )
+
+
+@pytest.fixture(scope="module", params=[5, 77])
+def fieldwise(spark, request):
+    """One hourly cagg per seed carrying the gauge, 1-D stats, 2-D
+    stats, candlestick and heartbeat partials of the same rows."""
+    rows = _gen(request.param, n=200)
+    tb = {"tiebreak": ["rid"]}
+    _, _, cagg = _mk(
+        spark, rows,
+        gauges={"g": {"value": "v", **tb}},
+        stats_aggs={
+            "st": {"value": "v"},
+            "s2": {"value": "v", "y": "CAST(rid % 13 AS DOUBLE)"},
+        },
+        candlesticks={"ohlc": {"price": "v", **tb}},
+        heartbeat_aggs={"hb": {"liveness": "20 minutes", **tb}},
+    )
+    return request.param, rows, cagg
+
+
+def test_gauge_serve_equals_raw(spark, fieldwise):
+    from timescaledb_spark.functions.counters import gauge_agg
+
+    seed, rows, cagg = fieldwise
+    fields = ["n", "delta", "idelta", "num_changes", "first_us", "last_us"]
+    got = {
+        (r["bucket"], r["dev"]): tuple(r[f] for f in fields)
+        + (r["rate"], r["irate"])
+        for r in cagg.gauge_at_grain("g", grain="1 day").collect()
+    }
+    raw = gauge_agg(
+        _raw_day(spark, rows), "ts", "v", by=["day", "dev"],
+        tiebreak=["rid"],
+    )
+    want = {
+        (r["day"], r["dev"]): tuple(r[f] for f in fields)
+        + (r["rate"], r["irate"])
+        for r in raw.collect()
+    }
+    assert set(got) == set(want) and len(want) > 0
+    for k in want:
+        assert got[k][:6] == want[k][:6], (seed, k)
+        assert _approx_eq(got[k][6], want[k][6]), (seed, k)
+        assert _approx_eq(got[k][7], want[k][7]), (seed, k)
+
+
+def test_stats_serve_equals_raw(spark, fieldwise):
+    from timescaledb_spark.functions.stats import stats_agg_1d
+
+    seed, rows, cagg = fieldwise
+    got = {
+        (r["bucket"], r["dev"]): (
+            r["n"], r["sum"], r["avg"], r["stddev"], r["variance"],
+            r["min"], r["max"],
+        )
+        for r in cagg.stats_at_grain("st", grain="1 day").collect()
+    }
+    raw = _raw_day(spark, rows).groupBy("day", "dev").agg(
+        F.min("v").alias("mn"), F.max("v").alias("mx")
+    )
+    mm = {(r["day"], r["dev"]): (r["mn"], r["mx"]) for r in raw.collect()}
+    want = {
+        (r["day"], r["dev"]): (
+            r["num_vals"], r["sum_v"], r["average"], r["stddev"],
+            r["variance"], *mm[(r["day"], r["dev"])],
+        )
+        for r in stats_agg_1d(
+            _raw_day(spark, rows), "v", by=["day", "dev"]
+        ).collect()
+    }
+    assert set(got) == set(want) and len(want) > 0
+    for k in want:
+        assert got[k][0] == want[k][0], (seed, k)
+        for g_v, w_v in zip(got[k][1:], want[k][1:]):
+            assert _approx_eq(g_v, w_v), (seed, k, got[k], want[k])
+
+
+def test_stats2d_serve_equals_raw(spark, fieldwise):
+    from timescaledb_spark.functions.stats import stats_agg_2d
+
+    seed, rows, cagg = fieldwise
+    fields = ["slope", "intercept", "covariance"]
+    got = {
+        (r["bucket"], r["dev"]): (r["n"], *[r[f] for f in fields])
+        for r in cagg.stats2d_at_grain("s2", grain="1 day").collect()
+    }
+    day = _raw_day(spark, rows).withColumn(
+        "y", (F.col("rid") % 13).cast("double")
+    )
+    want = {
+        (r["day"], r["dev"]): (r["n"], *[r[f] for f in fields])
+        for r in stats_agg_2d(day, "v", "y", by=["day", "dev"]).collect()
+    }
+    assert set(got) == set(want) and len(want) > 0
+    for k in want:
+        assert got[k][0] == want[k][0], (seed, k)
+        for g_v, w_v in zip(got[k][1:], want[k][1:]):
+            assert _approx_eq(g_v, w_v), (seed, k, got[k], want[k])
+
+
+def test_candlestick_serve_equals_raw(spark, fieldwise):
+    from timescaledb_spark.functions.stats import candlestick_agg
+
+    seed, rows, cagg = fieldwise
+    fields = ["open", "high", "low", "close", "volume", "vwap", "n"]
+    got = {
+        (r["bucket"], r["dev"]): tuple(r[f] for f in fields)
+        for r in cagg.candlestick_at_grain("ohlc", grain="1 day").collect()
+    }
+    raw = candlestick_agg(
+        _raw_day(spark, rows), "ts", "v", bucket_width="1 day",
+        by=["dev"], tiebreak=["rid"],
+    )
+    want = {
+        (r["bucket"], r["dev"]): tuple(r[f] for f in fields)
+        for r in raw.collect()
+    }
+    assert set(got) == set(want) and len(want) > 0
+    for k in want:
+        for g_v, w_v in zip(got[k], want[k]):
+            assert _approx_eq(g_v, w_v), (seed, k, got[k], want[k])
+
+
+def test_heartbeat_serve_equals_raw(spark, fieldwise):
+    from timescaledb_spark.functions.state import heartbeat_agg
+
+    seed, rows, cagg = fieldwise
+    fields = ["n", "live_us", "num_live_ranges", "first_us", "last_us"]
+    got = {
+        (r["bucket"], r["dev"]): tuple(r[f] for f in fields)
+        + (r["dead_us"],)
+        for r in cagg.heartbeat_at_grain("hb", grain="1 day").collect()
+    }
+    raw = heartbeat_agg(
+        _raw_day(spark, rows, col=None), "ts", by=["day", "dev"],
+        liveness="20 minutes", tiebreak=["rid"],
+    )
+    want = {
+        (r["day"], r["dev"]): tuple(r[f] for f in fields)
+        + (r["last_us"] + 20 * 60_000_000 - r["first_us"] - r["live_us"],)
+        for r in raw.collect()
+    }
+    assert got == want and len(want) > 0, seed

@@ -448,3 +448,109 @@ def test_shuffle_count_excludes_reused_exchange(spark):
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def family_caggs(spark, tmp_path_factory):
+    """One hourly cagg carrying every partial family, refreshed over the
+    first half of the data so realtime reads union a mat side with a
+    raw-side partial build, plus a daily rollup_of child over the
+    ordered and commutative families."""
+    ts = TSSession(spark, str(tmp_path_factory.mktemp("fam_plans")))
+    ht = ts.create_hypertable("m", "ts", chunk_interval="1 day")
+    ht.insert(
+        spark.range(4 * 24 * 6).select(
+            F.timestamp_micros(
+                (F.lit(T0_US) + F.col("id") * 600 * 1_000_000).cast("long")
+            ).alias("ts"),
+            F.col("id").alias("rid"),
+            (F.col("id") % 3).cast("string").alias("dev"),
+            (F.col("id") % 37).cast("double").alias("v"),
+            F.when(F.col("id") % 5 < 3, "up").otherwise("down").alias("s"),
+        )
+    )
+    tb = {"tiebreak": ["rid"]}
+    cagg = ts.create_cagg(
+        "fam", ht, bucket_width="1 hour", aggs={}, group_by=["dev"],
+        sketches={"sk": {"value": "v"}},
+        counters={"cnt": {"value": "v", **tb}},
+        gauges={"g": {"value": "v", **tb}},
+        stats_aggs={"st": {"value": "v"}, "st2": {"value": "v", "y": "rid"}},
+        time_weights={"tw": {"value": "v", **tb}},
+        candlesticks={"ohlc": {"price": "v", **tb}},
+        state_aggs={"sa": {"state": "s", **tb}},
+        freq_aggs={"fq": {"value": "dev", "capacity": 8}},
+        maxn_aggs={"mx": {"value": "v", "n": 3}},
+        heartbeat_aggs={"hb": {"liveness": "15 minutes", **tb}},
+        tdigest_aggs={"td": {"value": "v", "delta": 50}},
+    )
+    cagg.refresh(start=T0_US, end=T0_US + 2 * 86_400_000_000)
+    child = ts.create_cagg(
+        "fam_d", "_mat_fam", bucket_width="1 day", aggs={},
+        group_by=["dev"],
+        counters={"cnt_d": {"rollup_of": "cnt"}},
+        gauges={"g_d": {"rollup_of": "g"}},
+        stats_aggs={"st_d": {"rollup_of": "st"}},
+        time_weights={"tw_d": {"rollup_of": "tw"}},
+        candlesticks={"ohlc_d": {"rollup_of": "ohlc"}},
+        heartbeat_aggs={"hb_d": {"rollup_of": "hb"}},
+    )
+    return cagg, child
+
+
+_FAMILY_READS = {
+    "sketch": lambda c, rt: c.quantiles([0.5], "sk", "1 day", realtime=rt),
+    "counter": lambda c, rt: c.counter_at_grain("cnt", "1 day", realtime=rt),
+    "gauge": lambda c, rt: c.gauge_at_grain("g", "1 day", realtime=rt),
+    "stats": lambda c, rt: c.stats_at_grain("st", "1 day", realtime=rt),
+    "stats2d": lambda c, rt: c.stats2d_at_grain("st2", "1 day", realtime=rt),
+    "time_weight": lambda c, rt: c.time_weighted_at_grain(
+        "tw", "1 day", realtime=rt
+    ),
+    "candlestick": lambda c, rt: c.candlestick_at_grain(
+        "ohlc", "1 day", realtime=rt
+    ),
+    "state_agg": lambda c, rt: c.state_durations_at_grain(
+        "sa", "1 day", realtime=rt
+    ),
+    "freq": lambda c, rt: c.topn_at_grain("fq", 2, "1 day", realtime=rt),
+    "maxn": lambda c, rt: c.max_n_at_grain("mx", 2, "1 day", realtime=rt),
+    "heartbeat": lambda c, rt: c.heartbeat_at_grain(
+        "hb", "1 day", realtime=rt
+    ),
+    "tdigest": lambda c, rt: c.tdigest_quantiles_at_grain(
+        [0.5], "td", "1 day", realtime=rt
+    ),
+}
+# Exchange counts of each family's at-grain read, materialized-only and
+# realtime (the realtime side adds the raw-side partial build)
+_FAMILY_READ_SHUFFLES = {
+    "sketch": (2, 4),
+    "counter": (1, 2),
+    "gauge": (1, 2),
+    "stats": (1, 2),
+    "stats2d": (1, 2),
+    "time_weight": (1, 2),
+    "candlestick": (1, 2),
+    "state_agg": (2, 4),
+    "freq": (2, 4),
+    "maxn": (1, 2),
+    "heartbeat": (1, 2),
+    "tdigest": (1, 2),
+}
+
+
+@pytest.mark.parametrize("realtime", [False, True])
+@pytest.mark.parametrize("family", sorted(_FAMILY_READS))
+def test_partial_family_read_shuffle_count(family_caggs, family, realtime):
+    cagg, _ = family_caggs
+    df = _FAMILY_READS[family](cagg, realtime)
+    assert shuffle_count(df) == _FAMILY_READ_SHUFFLES[family][realtime]
+
+
+def test_rollup_of_refresh_shuffle_count(family_caggs):
+    """The refresh query of a rollup_of child: each family's merge over
+    the parent's stored states, joined 1:1 on the child keys."""
+    _, child = family_caggs
+    df = child._aggregate(child._source().read())
+    assert shuffle_count(df) == 6

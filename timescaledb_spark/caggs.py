@@ -32,12 +32,12 @@ only touches overlapping mat chunks.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import time as _time
 from datetime import datetime, timezone as _tz
-from typing import Optional, Sequence, Union
+from dataclasses import dataclass, field
+from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -205,6 +205,822 @@ def _over(partition: Sequence[str], order: Sequence[str]) -> str:
     return p + "ORDER BY " + ", ".join(order)
 
 
+# ------------------------------------------------------------------
+# Partial families: the mergeable toolkit states a cagg can store.
+#
+# Each family is a state (built from raw rows per bucket), a merge
+# (states of adjacent buckets → one state) and a finalize (merged
+# state → accessor values). One merge serves both hierarchical
+# ``rollup_of`` children (packed back into a state struct) and the
+# ``*_at_grain`` reads (projected through ``finalize``). Fieldwise
+# merges are declared as ``fields``; ordered ones (one series, sorted
+# by parent bucket) add ``bounds``: per-row boundary terms computed
+# from the last non-NULL earlier state. The merges are SQL strings
+# (one py4j parse each), and NULL states are masked so a child group
+# whose parent states are all NULL keeps its row with a NULL state.
+# ------------------------------------------------------------------
+
+# state fields added after states were first materialized: an older
+# stored state lacks them and the merge serves NULL for them
+_LATE_FIELDS = ("num_changes",)
+_SPAN_S = "(CAST((_f_last_us - _f_first_us) AS DOUBLE) / 1000000.0D)"
+
+
+def _same(col: str, spec: dict, *_parent) -> dict:
+    return spec
+
+
+def _liveness_us(v) -> int:
+    return int(v) if isinstance(v, int) else parse_interval(v).us
+
+
+@dataclass(frozen=True)
+class PartialFamily:
+    """One cagg partial family (see the section comment above).
+
+    ``normalize(col, spec)`` applies defaults and range checks;
+    ``inherit(col, spec, parent_spec)`` is the ``rollup_of`` rule for
+    what a child takes from (or must agree with) its parent. A spec
+    carrying the ``variant`` key (``"y"`` for 2-D stats) is served by
+    the variant record, which shares the catalog key."""
+
+    key: str  # catalog key and create() kwarg
+    label: str  # name in messages
+    required: str  # spec key a non-rollup spec must carry
+    state: str  # raw-side state builder (ContinuousAggregate method)
+    exprs: tuple = ("value",)  # spec keys holding SQL expressions
+    sql_fns: tuple = ()  # CREATE MATERIALIZED VIEW aggregate names
+    normalize: Callable = _same
+    inherit: Callable = _same
+    ordered: bool = False  # merge within one series: full group_by
+    fields: tuple = ()  # (state field, merge aggregate SQL)
+    bounds: Optional[Callable] = None  # (prev, spec) -> boundary cols
+    custom_merge: Optional[Callable] = None  # (d, keys, spec, col)
+    finalize: tuple = ()  # accessor SQL over _f_<field>; {spec} keys
+    serve: Optional[str] = None  # at-grain read method
+    accessors: dict = field(default_factory=dict)  # toolkit fn -> col
+    interp: dict = field(default_factory=dict)  # interpolated fns
+    interp_serve: Optional[str] = None
+    srf: Optional[tuple] = None  # (fn, method, served columns)
+    quantiles: Optional[tuple] = None  # (quantile method, rank method)
+    variant: Optional[tuple] = None  # (spec key, PartialFamily)
+
+    def shape(self, spec: dict) -> "PartialFamily":
+        if self.variant and self.variant[0] in spec:
+            return self.variant[1]
+        return self
+
+    def shapes(self) -> tuple:
+        return (self,) + ((self.variant[1],) if self.variant else ())
+
+    def merge_fields(
+        self, d: DataFrame, keys: Sequence[str], spec: dict
+    ) -> DataFrame:
+        """``(keys…, _f_nn, _f_<field>…)`` from ``d(keys…, _src,
+        _st)``: ``_f_nn`` counts the non-NULL states merged."""
+        if self.bounds is not None:
+            wo = _over(keys, ["_src ASC"])
+
+            def prev(f: str) -> str:
+                return (
+                    f"last(CASE WHEN _st IS NOT NULL THEN _st.{f} END, "
+                    f"true) OVER ({wo} ROWS BETWEEN UNBOUNDED PRECEDING "
+                    f"AND 1 PRECEDING)"
+                )
+
+            d = d.selectExpr(
+                *[_q(k) for k in keys],
+                "_st",
+                "CASE WHEN _st IS NOT NULL THEN _src END AS _k",
+                *self.bounds(prev, spec),
+            )
+        late = [
+            f
+            for f, _ in self.fields
+            if f in _LATE_FIELDS and not _struct_has_field(d, "_st", f)
+        ]
+        return d.groupBy(*keys).agg(
+            F.expr("count(_st)").alias("_f_nn"),
+            *[
+                (
+                    F.lit(None).cast("long") if f in late else F.expr(a)
+                ).alias(f"_f_{f}")
+                for f, a in self.fields
+            ],
+        )
+
+    def merge(
+        self, d: DataFrame, keys: Sequence[str], spec: dict, col: str
+    ) -> DataFrame:
+        """Merged STATE per ``keys`` as column ``col`` — the
+        ``rollup_of`` child's state over its parent's states."""
+        if self.custom_merge is not None:
+            return self.custom_merge(d, keys, spec, col)
+        packed = ", ".join(f"'{f}', _f_{f}" for f, _ in self.fields)
+        return self.merge_fields(d, keys, spec).selectExpr(
+            *[_q(k) for k in keys],
+            f"CASE WHEN _f_nn > 0 THEN named_struct({packed}) END "
+            f"AS {_q(col)}",
+        )
+
+
+def _counter_bounds(p, spec) -> list:
+    # one reset-adjusted boundary step per adjacent pair of states
+    step = f"(_st.first_val - {p('last_val')})"
+    return [
+        f"CASE WHEN _st IS NULL THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {p('last_val')} IS NULL THEN 0.0D "
+        f"WHEN {step} < 0 THEN _st.first_val ELSE {step} END AS _binc",
+        f"CASE WHEN _st IS NOT NULL THEN CAST(({step} < 0) AS INT) END "
+        f"AS _breset",
+        f"CASE WHEN _st IS NOT NULL AND {p('last_val')} IS NOT NULL THEN "
+        f"CAST((_st.first_val != {p('last_val')}) AS INT) END AS _bchange",
+    ]
+
+
+def _gauge_bounds(p, spec) -> list:
+    # a single-sample state's last step is the boundary step into it
+    return [
+        f"coalesce(_st.last_step, _st.first_val - {p('last_val')}) AS _cs",
+        f"coalesce(_st.last_prev_us, {p('last_us')}) AS _cp",
+        f"CASE WHEN _st IS NOT NULL AND {p('last_val')} IS NOT NULL THEN "
+        f"CAST((_st.first_val != {p('last_val')}) AS INT) END AS _bchange",
+    ]
+
+
+def _timeweight_bounds(p, spec) -> list:
+    # one interpolated segment from the earlier state's last sample
+    dt = f"CAST((_st.first_us - {p('last_us')}) AS DOUBLE)"
+    if str(spec.get("method", "locf")).lower() == "linear":
+        seg = f"({p('last_val')} + _st.first_val) / 2.0D * {dt}"
+    else:
+        seg = f"{p('last_val')} * {dt}"
+    return [
+        f"CASE WHEN _st IS NOT NULL THEN coalesce({seg}, 0.0D) END "
+        f"AS _bseg"
+    ]
+
+
+def _heartbeat_bounds(p, spec) -> list:
+    # the earlier state's last beat counted its full liveness L; merged
+    # it covers min(gap, L), and a gap <= L joins the two live ranges
+    liv = int(spec["liveness_us"])
+    gap = f"(_st.first_us - {p('last_us')})"
+    return [
+        f"coalesce(CASE WHEN {p('last_us')} IS NOT NULL THEN "
+        f"{liv} - least({gap}, {liv}) END, 0) AS _corr",
+        f"CASE WHEN {p('last_us')} IS NOT NULL AND {gap} <= {liv} "
+        f"THEN 1 ELSE 0 END AS _join",
+    ]
+
+
+def _merge_sketch(d, keys, spec, col) -> DataFrame:
+    """DDSketch bucket counts add losslessly (Masson VLDB'19 §2.3), so
+    the child state is bit-identical to one built from the raw rows.
+    explode_outer: a NULL parent state yields a NULL ``_sb`` row, so
+    the group survives with a NULL state instead of vanishing."""
+    per_bucket = (
+        d.select(*keys, F.explode_outer(F.col("_st")).alias("_sb", "_c"))
+        .groupBy(*keys, "_sb")
+        .agg(F.sum("_c").alias("_cnt"))
+    )
+    ent = F.when(F.col("_sb").isNotNull(), F.struct("_sb", "_cnt"))
+    return per_bucket.groupBy(*keys).agg(
+        F.when(
+            F.count("_sb") > 0,
+            F.map_from_entries(F.array_sort(F.collect_list(ent))),
+        ).alias(col)
+    )
+
+
+def _join_keys(left: DataFrame, right: DataFrame, keys, how="inner"):
+    """Null-safe 1:1 join of two aggregates over the same keys, sides
+    aliased ``_jl``/``_jr`` (both descend from one lineage)."""
+    cond = None
+    for k in keys:
+        c = F.col(f"_jl.{k}").eqNullSafe(F.col(f"_jr.{k}"))
+        cond = c if cond is None else cond & c
+    return left.alias("_jl").join(right.alias("_jr"), cond, how)
+
+
+def _mg_trim_exprs(ents_col: str, cap: int):
+    """Misra–Gries trim of an exact ``array<struct(c, v)>`` count
+    list to ``capacity`` entries: sort by (count desc, value asc),
+    subtract the (capacity+1)-th count from the survivors, drop the
+    non-positive remainder (the offline SpaceSaving construction;
+    error bound per value ≤ N/(capacity+1), and summed lower bounds
+    stay mergeable — Agarwal et al., "Mergeable Summaries",
+    PODS'12). When a bucket's distinct count ≤ capacity the cut is
+    0 and the stored counts are EXACT — the any-grain exactness
+    contract the q_cagg_topn gate checks. Returns (sorted_expr,
+    counts_map_expr over the sorted alias ``_f_se``)."""
+    sorted_expr = F.expr(
+        f"array_sort({ents_col}, (a, b) -> CASE "
+        f"WHEN a.c > b.c THEN -1 WHEN a.c < b.c THEN 1 "
+        f"WHEN a.v < b.v THEN -1 WHEN a.v > b.v THEN 1 ELSE 0 END)"
+    )
+    cut = (
+        f"IF(size(_f_se) > {cap}, "
+        f"element_at(_f_se, {cap + 1}).c, CAST(0 AS BIGINT))"
+    )
+    counts = F.expr(
+        f"map_from_entries(filter(transform(slice(_f_se, 1, {cap}),"
+        f" e -> named_struct('v', e.v, 'c', e.c - {cut})),"
+        f" e -> e.c > 0))"
+    )
+    return sorted_expr, counts
+
+
+def _merge_freq(d, keys, spec, col) -> DataFrame:
+    """Child frequency state: per-value lower bounds ADD across the
+    parent's states (Misra–Gries union), then one re-trim to the child
+    capacity. The collect feeding the re-trim is capacity-bounded: a
+    rank window over the summed counts keeps the ``capacity + 1``
+    heaviest values (all the trim consults), in the trim's own total
+    order (count desc, value asc) — so a coarse child never builds a
+    parents-per-child × capacity list."""
+    from pyspark.sql import Window
+
+    cap = int(spec.get("capacity", 256))
+    st = F.col("_st")
+    totals = d.groupBy(*keys).agg(
+        F.count("_st").alias("_f_nn"),
+        F.sum(st["n"]).alias("_f_n"),
+    )
+    wrank = Window.partitionBy(*keys).orderBy(
+        F.col("_c").desc(), F.col("_v").asc_nulls_last()
+    )
+    summed = (
+        d.select(*keys, F.explode(st["counts"]).alias("_v", "_c"))
+        .groupBy(*keys, "_v")
+        .agg(F.sum("_c").alias("_c"))
+        .withColumn("_rk", F.row_number().over(wrank))
+        .filter(F.col("_rk") <= cap + 1)
+        .groupBy(*keys)
+        .agg(
+            F.collect_list(
+                F.struct(F.col("_c").alias("c"), F.col("_v").alias("v"))
+            ).alias("_f_ents")
+        )
+    )
+    j = _join_keys(totals, summed, keys, "left").select(
+        "_jl.*", F.col("_jr._f_ents").alias("_f_ents")
+    )
+    # a NULL _f_ents (every parent state NULL) flows through the trim
+    # as NULL and is masked by the guard below
+    sorted_expr, counts = _mg_trim_exprs("_f_ents", cap)
+    j = j.select(*keys, "_f_n", "_f_nn", sorted_expr.alias("_f_se"))
+    return j.select(
+        *keys,
+        F.when(
+            (F.col("_f_nn") > 0) & F.col("_f_n").isNotNull(),
+            F.struct(F.col("_f_n").alias("n"), counts.alias("counts")),
+        ).alias(col),
+    )
+
+
+def _merge_maxn(d, keys, spec, col) -> DataFrame:
+    """Child candidate list: the top-n of the union is the top-n of
+    the concatenated parent lists, selected by a ``_rk <= n`` rank
+    window over the exploded candidates (never a flatten-collect).
+    Equal values are interchangeable, so the rank tie order never
+    changes the kept multiset; with a payload the entries are stored in
+    rank order (a struct sort would break the *_nulls_last payload
+    order on ascending ties)."""
+    from pyspark.sql import Window
+
+    keep = int(spec.get("n", 5))
+    desc = bool(spec.get("desc", True))
+    has_by = spec.get("by") is not None
+    st = F.col("_st")
+    totals = d.groupBy(*keys).agg(
+        F.count("_st").alias("_f_nn"),
+        F.sum(st["n"]).alias("_f_n"),
+    )
+    if has_by:
+        ex = d.select(
+            *keys,
+            F.explode(
+                F.arrays_zip(st["vals"].alias("v"), st["data"].alias("d"))
+            ).alias("_e"),
+        ).select(*keys, F.col("_e.v").alias("_v"), F.col("_e.d").alias("_d"))
+        order = (
+            [F.col("_v").desc(), F.col("_d").desc_nulls_last()]
+            if desc
+            else [F.col("_v").asc(), F.col("_d").asc_nulls_last()]
+        )
+        ent = F.struct(
+            F.col("_rk").alias("r"),
+            F.col("_v").alias("v"),
+            F.col("_d").alias("d"),
+        )
+        packed = F.sort_array(F.collect_list(ent), asc=True)
+    else:
+        ex = d.select(*keys, F.explode(st["vals"]).alias("_v"))
+        order = [F.col("_v").desc() if desc else F.col("_v").asc()]
+        packed = F.sort_array(F.collect_list("_v"), asc=not desc)
+    w = Window.partitionBy(*keys).orderBy(*order)
+    cand = (
+        ex.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= keep)
+        .groupBy(*keys)
+        .agg(packed.alias("_f_c"))
+    )
+    j = _join_keys(totals, cand, keys, "left").select(
+        "_jl.*", F.col("_jr._f_c").alias("_f_c")
+    )
+    if has_by:
+        fields = [
+            F.expr("transform(_f_c, e -> e.v)").alias("vals"),
+            F.expr("transform(_f_c, e -> e.d)").alias("data"),
+        ]
+    else:
+        fields = [F.col("_f_c").alias("vals")]
+    return j.select(
+        *keys,
+        F.when(
+            (F.col("_f_nn") > 0) & (F.col("_f_n") > 0),
+            F.struct(F.col("_f_n").alias("n"), *fields),
+        ).alias(col),
+    )
+
+
+def _merge_stateagg(d, keys, spec, col) -> DataFrame:
+    """Child state-agg state: duration maps add per state, each
+    boundary gap lands on the earlier parent's last state (LOCF),
+    bookends merge by earliest/latest parent."""
+    from pyspark.sql import Window
+
+    st = F.col("_st")
+    w = Window.partitionBy(*keys).orderBy(F.col("_src").asc())
+    wp = w.rowsBetween(Window.unboundedPreceding, -1)
+    prev_last_us = F.last(
+        F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
+    ).over(wp)
+    prev_last_state = F.last(
+        F.when(st.isNotNull(), st["last_state"]), ignorenulls=True
+    ).over(wp)
+    gap = st["first_us"] - prev_last_us
+    d = d.select(
+        *keys,
+        "_st",
+        F.when(st.isNotNull(), prev_last_state).alias("_bstate"),
+        F.when(st.isNotNull() & (gap > 0), gap).alias("_bgap"),
+        F.when(st.isNotNull(), F.col("_src")).alias("_k"),
+    )
+    per_state = d.select(
+        *keys, F.explode_outer(st["durations"]).alias("_s", "_dn")
+    ).select(
+        *keys,
+        "_s",
+        F.col("_dn")["d"].alias("_d"),
+        F.col("_dn")["n"].alias("_n"),
+    )
+    bnd = d.filter(
+        F.col("_bstate").isNotNull() & F.col("_bgap").isNotNull()
+    ).select(
+        *keys,
+        F.col("_bstate").alias("_s"),
+        F.col("_bgap").alias("_d"),
+        F.lit(0).cast("long").alias("_n"),
+    )
+    merged = (
+        per_state.unionByName(bnd)
+        .groupBy(*keys, "_s")
+        .agg(F.sum("_d").alias("_d"), F.sum("_n").alias("_n"))
+    )
+    ent = F.when(
+        F.col("_s").isNotNull(),
+        F.struct(
+            F.col("_s"),
+            F.struct(F.col("_d").alias("d"), F.col("_n").alias("n")).alias(
+                "dn"
+            ),
+        ),
+    )
+    maps = merged.groupBy(*keys).agg(F.collect_list(ent).alias("_f_ents"))
+    books = d.groupBy(*keys).agg(
+        F.count("_st").alias("_f_nn"),
+        F.sum(st["n"]).alias("_f_n"),
+        F.min(st["first_us"]).alias("_f_first_us"),
+        F.max(st["last_us"]).alias("_f_last_us"),
+        F.min_by(st["first_state"], F.col("_k")).alias("_f_first_state"),
+        F.max_by(st["last_state"], F.col("_k")).alias("_f_last_state"),
+    )
+    joined = _join_keys(books, maps, keys).select(
+        "_jl.*", F.col("_jr._f_ents")
+    )
+    return joined.select(
+        *keys,
+        F.when(
+            F.col("_f_nn") > 0,
+            F.struct(
+                F.col("_f_n").alias("n"),
+                F.col("_f_first_us").alias("first_us"),
+                F.col("_f_last_us").alias("last_us"),
+                F.col("_f_first_state").alias("first_state"),
+                F.col("_f_last_state").alias("last_state"),
+                F.map_from_entries(F.array_sort(F.col("_f_ents"))).alias(
+                    "durations"
+                ),
+            ),
+        ).alias(col),
+    )
+
+
+def _merge_tdigest(d, keys, spec, col) -> DataFrame:
+    from .functions.tdigest import merge_states
+
+    return merge_states(
+        d.select(*keys, F.col("_st").alias("_tdp")),
+        list(keys),
+        "_tdp",
+        int(spec.get("delta", 200)),
+        col,
+    )
+
+
+def _sketch_normalize(col, spec):
+    from .functions.ddsketch import _gamma
+
+    _gamma(float(spec.get("alpha", 0.01)))  # validates the range
+    return spec
+
+
+def _sketch_inherit(col, spec, pspec):
+    # quantile extraction must use the parent's gamma
+    spec.setdefault("alpha", pspec.get("alpha", 0.01))
+    return spec
+
+
+def _stats_inherit(col, spec, pspec):
+    # 2-D-ness is a property of the stored state shape: the child
+    # merges whatever the parent stores
+    if "y" in pspec:
+        spec["y"] = pspec["y"]
+    elif "y" in spec:
+        raise ValueError(
+            f"rollup_of={col!r}: parent stats column "
+            f"{spec['rollup_of']!r} is 1-D — a 2-D child cannot be built "
+            f"from 1-D moments (recreate the parent with "
+            f"stats_aggs={{..., 'y': ...}})"
+        )
+    return spec
+
+
+def _timeweight_normalize(col, spec):
+    if str(spec.get("method", "locf")).lower() not in ("locf", "linear"):
+        raise ValueError(
+            f"time_weight {col!r}: method must be 'locf' or 'linear', "
+            f"got {spec.get('method')!r}"
+        )
+    return spec
+
+
+def _timeweight_inherit(col, spec, pspec):
+    spec.setdefault("method", pspec.get("method", "locf"))
+    return spec
+
+
+def _freq_normalize(col, spec):
+    if int(spec.get("capacity", 256)) <= 0:
+        raise ValueError(f"freq_agg {col!r}: capacity must be positive")
+    return spec
+
+
+def _freq_inherit(col, spec, pspec):
+    spec.setdefault("capacity", pspec.get("capacity", 256))
+    # a topn_agg parent's declared n is what a bare topn(rollup(col))
+    # serves; the child keeps it
+    if "n" in pspec:
+        spec.setdefault("n", pspec["n"])
+    return spec
+
+
+def _maxn_normalize(col, spec):
+    if int(spec.get("n", 5)) <= 0:
+        raise ValueError(f"max_n {col!r}: n must be positive")
+    return spec
+
+
+def _maxn_inherit(col, spec, pspec):
+    # list length, direction and payload presence are state properties
+    spec.setdefault("n", pspec.get("n", 5))
+    spec.setdefault("desc", pspec.get("desc", True))
+    if pspec.get("by") is not None:
+        spec.setdefault("by", pspec["by"])
+    if int(spec["n"]) > int(pspec.get("n", 5)):
+        raise ValueError(
+            f"rollup_of={col!r}: child n ({spec['n']}) cannot exceed the "
+            f"parent's ({pspec.get('n', 5)}) — the parent states only "
+            f"keep that many values"
+        )
+    if bool(spec["desc"]) != bool(pspec.get("desc", True)):
+        raise ValueError(
+            f"rollup_of={col!r}: child direction must match the "
+            f"parent's (desc={pspec.get('desc', True)})"
+        )
+    return spec
+
+
+def _heartbeat_normalize(col, spec):
+    liv = spec["liveness"]
+    if _liveness_us(liv) <= 0 or (
+        not isinstance(liv, int) and parse_interval(liv).months
+    ):
+        raise ValueError(
+            f"heartbeat {col!r}: liveness must be a positive fixed-width "
+            f"interval"
+        )
+    return {**spec, "liveness_us": _liveness_us(liv)}
+
+
+def _heartbeat_inherit(col, spec, pspec):
+    # stored live times depend on the liveness interval; compare
+    # normalized microseconds ('5 minutes' == '300 seconds')
+    p_liv = pspec.get("liveness")
+    if "liveness" in spec and _liveness_us(spec["liveness"]) != _liveness_us(
+        p_liv
+    ):
+        raise ValueError(
+            f"rollup_of={col!r}: child liveness must match the parent's "
+            f"({p_liv!r})"
+        )
+    spec["liveness"] = p_liv
+    return spec
+
+
+def _tdigest_normalize(col, spec):
+    if int(spec.get("delta", 200)) < 2:
+        raise ValueError(
+            f"tdigest {col!r}: delta (compression) must be >= 2"
+        )
+    return spec
+
+
+def _tdigest_inherit(col, spec, pspec):
+    # a child re-bins the parent's centroids: it cannot hold more
+    spec.setdefault("delta", pspec.get("delta", 200))
+    if int(spec["delta"]) > int(pspec.get("delta", 200)):
+        raise ValueError(
+            f"rollup_of={col!r}: child delta ({spec['delta']}) cannot "
+            f"exceed the parent's ({pspec.get('delta', 200)}) — the "
+            f"parent states only keep that many centroids"
+        )
+    return spec
+
+
+_BOOKENDS = (
+    ("n", "sum(_st.n)"),
+    ("first_us", "min(_st.first_us)"),
+    ("last_us", "max(_st.last_us)"),
+)
+_ORDERED_VALS = _BOOKENDS + (
+    ("first_val", "min_by(_st.first_val, _k)"),
+    ("last_val", "max_by(_st.last_val, _k)"),
+)
+_TIMES = ("_f_first_us AS first_us", "_f_last_us AS last_us")
+_STATS_VAR = (
+    "CASE WHEN _f_n > 1 THEN greatest((_f_s2 - _f_s * _f_s / _f_n) / "
+    "(_f_n - 1), 0.0D) END"
+)
+_CXX = "greatest(_f_sxx - _f_sx * _f_sx / _f_n, 0.0D)"
+_CYY = "greatest(_f_syy - _f_sy * _f_sy / _f_n, 0.0D)"
+_CXY = "(_f_sxy - _f_sx * _f_sy / _f_n)"
+_SLOPE = f"({_CXY} / nullif({_CXX}, 0.0D))"
+
+_SKETCHES = PartialFamily(
+    "sketches", "sketch", "value", "_sketch_state",
+    sql_fns=("percentile_agg", "uddsketch"),
+    normalize=_sketch_normalize, inherit=_sketch_inherit,
+    custom_merge=_merge_sketch, quantiles=("quantiles", "rank"),
+)
+_COUNTERS = PartialFamily(
+    "counters", "counter", "value", "_counter_state",
+    sql_fns=("counter_agg",), ordered=True, bounds=_counter_bounds,
+    fields=_ORDERED_VALS + (
+        ("delta", "sum(_st.delta) + coalesce(sum(_binc), 0.0D)"),
+        ("num_resets", "sum(_st.num_resets) + coalesce(sum(_breset), 0)"),
+        ("num_changes",
+         "sum(_st.num_changes) + coalesce(sum(_bchange), 0)"),
+    ),
+    finalize=(
+        "_f_n AS n", "_f_delta AS delta",
+        f"CASE WHEN {_SPAN_S} > 0 THEN _f_delta / {_SPAN_S} END AS rate",
+        "_f_num_resets AS num_resets", "_f_num_changes AS num_changes",
+        *_TIMES, "_f_first_val AS first_val", "_f_last_val AS last_val",
+    ),
+    serve="counter_at_grain",
+    accessors={
+        "delta": "delta", "rate": "rate", "num_resets": "num_resets",
+        "num_changes": "num_changes", "num_vals": "n",
+        "first_val": "first_val", "last_val": "last_val",
+        "first_time": "first_us", "last_time": "last_us",
+    },
+    interp={"interpolated_delta": "delta", "interpolated_rate": "rate"},
+    interp_serve="interpolated_delta_at_grain",
+)
+_GAUGES = PartialFamily(
+    "gauges", "gauge", "value", "_gauge_state",
+    sql_fns=("gauge_agg",), ordered=True, bounds=_gauge_bounds,
+    fields=_ORDERED_VALS + (
+        ("last_step", "max_by(_cs, _k)"),
+        ("last_prev_us", "max_by(_cp, _k)"),
+        ("num_changes",
+         "sum(_st.num_changes) + coalesce(sum(_bchange), 0)"),
+    ),
+    finalize=(
+        "_f_n AS n", "_f_last_val - _f_first_val AS delta",
+        f"CASE WHEN {_SPAN_S} > 0 THEN (_f_last_val - _f_first_val) / "
+        f"{_SPAN_S} END AS rate",
+        "_f_last_step AS idelta",
+        "CASE WHEN _f_last_prev_us IS NOT NULL AND "
+        "(_f_last_us - _f_last_prev_us) > 0 THEN _f_last_step / "
+        "(CAST((_f_last_us - _f_last_prev_us) AS DOUBLE) / 1000000.0D) "
+        "END AS irate",
+        *_TIMES, "_f_first_val AS first_val", "_f_last_val AS last_val",
+        "_f_num_changes AS num_changes",
+    ),
+    serve="gauge_at_grain",
+    accessors={
+        "delta": "delta", "rate": "rate", "idelta": "idelta",
+        "irate": "irate", "num_changes": "num_changes", "num_vals": "n",
+        "first_val": "first_val", "last_val": "last_val",
+        "first_time": "first_us", "last_time": "last_us",
+    },
+)
+_STATS2D = PartialFamily(
+    "stats_aggs", "stats", "value", "_stats2d_state",
+    fields=tuple(
+        (f, f"sum(_st.{f})") for f in ("n", "sx", "sy", "sxx", "syy", "sxy")
+    ),
+    # nullif denominators, not CASE guards: ANSI divide-by-zero fires
+    # even in an unreached CASE branch under subexpression elimination
+    finalize=(
+        "_f_n AS n", "_f_sx / _f_n AS average_x",
+        "_f_sy / _f_n AS average_y", "_f_sx AS sum_x", "_f_sy AS sum_y",
+        f"{_SLOPE} AS slope",
+        f"(_f_sy - {_SLOPE} * _f_sx) / _f_n AS intercept",
+        f"{_CXY} / nullif(CAST((_f_n - 1) AS DOUBLE), 0.0D) AS covariance",
+        f"{_CXY} / nullif(sqrt({_CXX} * {_CYY}), 0.0D) AS corr",
+        f"coalesce({_CXY} * {_CXY} / nullif({_CXX} * {_CYY}, 0.0D), "
+        f"CASE WHEN {_CXX} > 0 AND {_CYY} = 0.0D THEN 1.0D END) "
+        f"AS determination_coefficient",
+    ),
+    serve="stats2d_at_grain",
+    accessors={
+        "slope": "slope", "intercept": "intercept", "corr": "corr",
+        "covariance": "covariance",
+        "determination_coefficient": "determination_coefficient",
+        "average_x": "average_x", "average_y": "average_y",
+        "sum_x": "sum_x", "sum_y": "sum_y", "num_vals": "n",
+    },
+)
+_STATS = PartialFamily(
+    "stats_aggs", "stats", "value", "_stats_state",
+    exprs=("value", "y"), sql_fns=("stats_agg",), inherit=_stats_inherit,
+    fields=(
+        ("n", "sum(_st.n)"), ("s", "sum(_st.s)"), ("s2", "sum(_st.s2)"),
+        ("mn", "min(_st.mn)"), ("mx", "max(_st.mx)"),
+    ),
+    finalize=(
+        "_f_n AS n", "_f_s AS `sum`",
+        "CASE WHEN _f_n > 0 THEN _f_s / _f_n END AS `avg`",
+        f"sqrt({_STATS_VAR}) AS stddev", f"{_STATS_VAR} AS variance",
+        "_f_mn AS `min`", "_f_mx AS `max`",
+    ),
+    serve="stats_at_grain",
+    accessors={
+        "average": "avg", "stddev": "stddev", "variance": "variance",
+        "sum": "sum", "num_vals": "n", "min_val": "min", "max_val": "max",
+    },
+    variant=("y", _STATS2D),
+)
+_TIME_WEIGHTS = PartialFamily(
+    "time_weights", "time_weight", "value", "_timeweight_state",
+    sql_fns=("time_weight",), normalize=_timeweight_normalize,
+    inherit=_timeweight_inherit, ordered=True, bounds=_timeweight_bounds,
+    fields=_ORDERED_VALS + (
+        ("integral", "sum(_st.integral) + coalesce(sum(_bseg), 0.0D)"),
+    ),
+    finalize=(
+        "coalesce(_f_integral / nullif(CAST((_f_last_us - _f_first_us) "
+        "AS DOUBLE), 0.0D), _f_first_val) AS tw_avg",
+        "_f_n AS n", *_TIMES,
+    ),
+    serve="time_weighted_at_grain",
+    accessors={"average": "tw_avg", "num_vals": "n"},
+    interp={"interpolated_average": "tw_avg"},
+    interp_serve="interpolated_average_at_grain",
+)
+_CANDLESTICKS = PartialFamily(
+    "candlesticks", "candlestick", "price", "_candlestick_state",
+    exprs=("price", "volume"), sql_fns=("candlestick_agg",),
+    # open/close from the earliest/latest state; equal-time ties (a
+    # subset group_by merging series) take the lowest open / highest
+    # close, deterministically
+    fields=_BOOKENDS + (
+        ("open", "min_by(_st.open, struct(_st.first_us, _st.open))"),
+        ("high", "max(_st.high)"), ("low", "min(_st.low)"),
+        ("close", "max_by(_st.close, struct(_st.last_us, _st.close))"),
+        ("volume", "sum(_st.volume)"), ("pv", "sum(_st.pv)"),
+    ),
+    finalize=(
+        "_f_open AS open", "_f_high AS high", "_f_low AS low",
+        "_f_close AS close", "_f_volume AS volume",
+        "_f_pv / _f_volume AS vwap", "_f_n AS n", *_TIMES,
+    ),
+    serve="candlestick_at_grain",
+    accessors={
+        "open": "open", "high": "high", "low": "low", "close": "close",
+        "volume": "volume", "vwap": "vwap", "num_vals": "n",
+    },
+)
+_STATE_AGGS = PartialFamily(
+    "state_aggs", "state_agg", "state", "_stateagg_state",
+    exprs=("state",), sql_fns=("state_agg",), ordered=True,
+    custom_merge=_merge_stateagg, serve="state_durations_at_grain",
+    # num_vals is the aggregate's total sample count over all states
+    accessors={"num_vals": "n", "duration_in": "duration_us"},
+    interp={"interpolated_duration_in": "duration_us"},
+    interp_serve="interpolated_duration_in_at_grain",
+    srf=("into_values", "state_durations_at_grain", ("state", "duration_us")),
+)
+_FREQ_AGGS = PartialFamily(
+    "freq_aggs", "freq_agg", "value", "_freq_state",
+    sql_fns=("freq_agg", "topn_agg"), normalize=_freq_normalize,
+    inherit=_freq_inherit, custom_merge=_merge_freq,
+    srf=("topn", "topn_at_grain", ("value", "freq_lb")),
+)
+_MAXN_AGGS = PartialFamily(
+    "maxn_aggs", "max_n", "value", "_maxn_state",
+    exprs=("value", "by"), sql_fns=("max_n", "min_n", "max_n_by", "min_n_by"),
+    normalize=_maxn_normalize, inherit=_maxn_inherit,
+    custom_merge=_merge_maxn,
+    srf=("into_values", "max_n_at_grain", ("value", "data")),
+)
+_HEARTBEAT_AGGS = PartialFamily(
+    "heartbeat_aggs", "heartbeat", "liveness", "_heartbeat_state",
+    exprs=(), sql_fns=("heartbeat_agg",), normalize=_heartbeat_normalize,
+    inherit=_heartbeat_inherit, ordered=True, bounds=_heartbeat_bounds,
+    fields=_BOOKENDS + (
+        ("live_us", "sum(_st.live_us) - sum(_corr)"),
+        ("ranges", "sum(_st.ranges) - sum(_join)"),
+    ),
+    finalize=(
+        "_f_n AS n", "_f_live_us AS live_us",
+        "_f_last_us + {liveness_us} - _f_first_us - _f_live_us AS dead_us",
+        "_f_ranges AS num_live_ranges", *_TIMES,
+    ),
+    serve="heartbeat_at_grain",
+    accessors={
+        "live_time": "live_us", "dead_time": "dead_us",
+        "num_live_ranges": "num_live_ranges", "num_heartbeats": "n",
+        "first_time": "first_us", "last_time": "last_us",
+    },
+    interp={
+        "interpolated_live_time": "live_us",
+        "interpolated_dead_time": "dead_us",
+    },
+    interp_serve="heartbeat_interpolated_at_grain",
+)
+_TDIGEST_AGGS = PartialFamily(
+    "tdigest_aggs", "tdigest", "value", "_tdigest_state",
+    sql_fns=("tdigest",), normalize=_tdigest_normalize,
+    inherit=_tdigest_inherit, custom_merge=_merge_tdigest,
+    serve="tdigest_summary_at_grain",
+    accessors={
+        "num_vals": "n", "min_val": "min_val", "max_val": "max_val",
+        "mean": "mean",
+    },
+    quantiles=("tdigest_quantiles_at_grain", "tdigest_rank_at_grain"),
+)
+# catalog key -> family; the order is the order of the partial joins
+# in a cagg's defining query
+FAMILIES = {
+    f.key: f
+    for f in (
+        _SKETCHES, _COUNTERS, _GAUGES, _STATS, _TIME_WEIGHTS,
+        _CANDLESTICKS, _STATE_AGGS, _FREQ_AGGS, _MAXN_AGGS,
+        _HEARTBEAT_AGGS, _TDIGEST_AGGS,
+    )
+}
+# CREATE MATERIALIZED VIEW aggregate name -> family
+FAMILY_OF_SQL_FN = {
+    fn: f for f in FAMILIES.values() for fn in f.sql_fns
+}
+
+
+def family_of(row: dict, col: str):
+    """``(family, spec)`` of partial column ``col`` in catalog row
+    ``row``, or None when ``col`` is not a partial column."""
+    for fam in FAMILIES.values():
+        spec = (row.get(fam.key) or {}).get(col)
+        if spec is not None:
+            return fam, spec
+    return None
+
+
 class ContinuousAggregate:
     def __init__(self, ts, row: dict):
         self.ts = ts
@@ -265,117 +1081,48 @@ class ContinuousAggregate:
         that span buckets give unexpected results after partial refresh,
         because each refresh recomputes windows only over its dirty
         ranges. Keep every OVER clause partitioned by the bucket column.
-        ``sketches``: output column -> ``{"value": <expr>, "alpha": a}``:
-        the mat table stores a mergeable DDSketch STATE
-        (``map<int,bigint>`` of log-bucket -> count) per (bucket, group)
-        instead of a finished number — the toolkit
-        ``percentile_agg``/``uddsketch``-inside-a-cagg idiom
-        (timescaledb-toolkit rollup; partial-vs-finalized discussion in
-        ``tsl/src/continuous_aggs/finalize.c``). Because bucket counts
-        ADD losslessly (Masson VLDB'19 §2.3), :meth:`quantiles` can then
-        serve p50/p95/p99 at ANY coarser grain — day/month/whole-table —
-        by merging the stored hourly states, never rescanning raw data;
-        the realtime view unions mat-side states below the watermark
-        with raw-side states computed above it. Spark's binary HLL
-        states need no special support: put ``hll_sketch_agg(col)`` in
-        ``aggs`` and merge with ``hll_union_agg`` at read (see
-        ``tests/test_cagg_sketch.py``).
-        ``counters``: output column -> ``{"value": <expr>,
-        "tiebreak": [cols…]}``: the mat table stores a mergeable
-        COUNTER partial per (bucket, group) — ``struct(n, first_us,
-        last_us, first_val, last_val, delta, num_resets)`` with
-        prometheus reset semantics (the toolkit
-        ``rollup(counter_agg(...))`` idiom). Because cagg buckets
-        partition time disjointly, merging two adjacent partials needs
-        only the one boundary step (reset-adjusted ``B.first_val −
-        A.last_val``), so :meth:`counter_at_grain` serves exact
-        delta/rate/resets at ANY coarser grain from the stored
-        partials — identical to ``counter_agg`` over the raw rows of
-        that grain, with zero raw rescans below the watermark.
-        ``tiebreak`` columns break equal-timestamp ordering like
-        ``counter_agg``'s.
-        ``gauges``: like ``counters`` but for metrics that may
-        legitimately decrease (toolkit ``gauge_agg``): the partial also
-        records the last step and its elapsed time, so
-        :meth:`gauge_at_grain` serves delta/rate AND idelta/irate at
-        any grain, boundary steps included.
-        ``stats_aggs``: output column -> ``{"value": <expr>}``: a
-        moments partial ``struct(n, s, s2, mn, mx)`` (toolkit 1-D
-        ``stats_agg``); :meth:`stats_at_grain` merges by fieldwise
-        add/min/max and serves n/sum/avg/stddev/variance/min/max at
-        any grain. With a ``"y"`` key — ``{"value": <x expr>, "y":
-        <y expr>}`` — the TWO-variable form (toolkit
-        ``stats_agg(y, x)``, PG ``regr_*``) stores comoments
-        ``struct(n, sx, sy, sxx, syy, sxy)`` over the pairs where both
-        are non-NULL, and :meth:`stats2d_at_grain` serves slope/
-        intercept/corr/covariance at any grain.
-        ``time_weights``: output column -> ``{"value": <expr>,
-        "method": "locf" | "linear", "tiebreak": [cols…]}``: a
-        mergeable TIME-WEIGHT partial per (bucket, group) —
-        ``struct(n, first_us, first_val, last_us, last_val,
-        integral)`` where ``integral`` is the within-bucket integral
-        of the LOCF (or linear) interpolant in µs·value (the toolkit
-        ``time_weight('LOCF', ts, value)`` decomposition). Merging
-        two adjacent partials adds exactly one boundary segment
-        (``A.last → B.first``), so :meth:`time_weighted_at_grain`
-        serves the exact time-weighted average of ANY coarser grain
-        from the stored partials — identical to ``time_weight →
-        average`` over the raw rows of that grain, zero raw rescans
-        below the watermark (the toolkit
-        ``average(rollup(time_weight(...)))`` idiom).
-        ``state_aggs``: output column -> ``{"state": <expr>,
-        "tiebreak": [cols…]}``: a mergeable STATE-AGG partial per
-        (bucket, group) — ``struct(n, first_us, last_us, first_state,
-        last_state, durations: map<state, struct(d, n)>)`` with the
-        toolkit ``state_agg(ts, state)`` LOCF semantics (a state holds
-        until the next sample; the final sample holds zero time; NULL
-        states are skipped — strict). Merging adjacent partials adds
-        the boundary gap to the EARLIER partial's last state, so
-        :meth:`state_durations_at_grain` serves exact per-state
-        durations at any coarser grain — the toolkit
-        ``duration_in(state, rollup(state_agg(...)))`` idiom.
-        ``freq_aggs``: output column -> ``{"value": <expr>,
-        "capacity": k}``: a Misra–Gries/SpaceSaving frequency partial
-        per (bucket, group) — ``struct(n, counts: map<string,long>)``
-        of at most ``capacity`` heavy hitters (toolkit
-        ``freq_agg``/``topn_agg``). Lower bounds sum across merged
-        states (Agarwal et al., PODS'12), so :meth:`topn_at_grain`
-        serves "top values per hour, at any grain" — exactly whenever
-        each bucket's distinct count fits the capacity.
-        ``maxn_aggs``: output column -> ``{"value": <expr>, "n": k,
-        "desc": True|False}``: the ``n`` largest (smallest) values per
-        (bucket, group) — ``struct(n, vals: array<double>)`` (toolkit
-        ``max_n``/``min_n``). Top-n candidate lists merge losslessly,
-        so :meth:`max_n_at_grain` is exact at every grain.
-        ``heartbeat_aggs``: output column -> ``{"liveness": <interval>,
-        "tiebreak": [cols…]}``: a liveness partial per (bucket, group)
-        — ``struct(n, first_us, last_us, live_us, ranges)`` where
-        ``live_us`` is the union length of the per-heartbeat
-        ``[t, t+liveness)`` intervals (toolkit ``heartbeat_agg``).
-        Adjacent partials merge with one boundary correction each, so
-        :meth:`heartbeat_at_grain` serves exact
-        live_time/dead_time/num_live_ranges at any grain — the ops
-        analog of the counter family.
-        ``tdigest_aggs``: output column -> ``{"value": <expr>,
-        "delta": d}``: a mergeable T-DIGEST percentile state per
-        (bucket, group) — ``struct(n, min, max, means, weights)`` with
-        ≤ ``delta`` k1-binned centroids (toolkit ``tdigest``, the
-        rank-error sibling of ``sketches``' DDSketch; Dunning & Ertl
-        arXiv:1902.04023). :meth:`tdigest_quantiles_at_grain` serves
-        ``approx_percentile`` at any coarser grain with free
-        regrouping; lossless (exact percentile_cont) while a served
-        group holds ≤ delta values.
-        ``candlesticks``: output column -> ``{"price": <expr>,
-        "volume": <expr> | None, "tiebreak": [cols…]}``: a mergeable
-        OHLC partial per (bucket, group) — ``struct(n, first_us,
-        last_us, open, high, low, close, volume, pv)`` (toolkit
-        ``candlestick_agg``; ``pv`` = Σ price×volume for vwap).
-        open/close merge by the earliest/latest parent bucket
-        (buckets partition time disjointly), high/low/volume/pv merge
-        by max/min/sum, so :meth:`candlestick_at_grain` serves exact
-        OHLC/volume/vwap at any grain — the toolkit
-        ``rollup(candlestick_agg(...))`` idiom.
+        Partial families (``sketches=`` … ``tdigest_aggs=``): output
+        column -> spec. Instead of a finished number the mat table
+        stores a mergeable STATE per (bucket, group) — the toolkit
+        ``rollup(counter_agg(...))`` idiom — so the ``*_at_grain``
+        reads serve any coarser grain by merging stored states, never
+        rescanning raw rows below the watermark, and the realtime view
+        unions mat-side states with raw-side states above it.
+        :data:`FAMILIES` lists, per family, the spec key a spec must
+        carry, which keys are SQL expressions, the defaults and range
+        checks, and the merge. Spec keys by family:
+
+        - ``sketches``: ``value``, ``alpha`` — a DDSketch
+          ``map<int,bigint>`` (``percentile_agg``/``uddsketch``); serve
+          with :meth:`quantiles`/:meth:`rank`. Spark's binary HLL
+          states need no family: put ``hll_sketch_agg(col)`` in
+          ``aggs`` and serve with :meth:`distinct_at_grain`.
+        - ``counters`` / ``gauges``: ``value``, ``tiebreak`` —
+          prometheus-reset counter / gauge bookends and steps.
+        - ``stats_aggs``: ``value`` (x), optional ``y`` — 1-D moments,
+          or 2-D comoments over the pairs where both are non-NULL.
+        - ``time_weights``: ``value``, ``method`` (``locf``|``linear``),
+          ``tiebreak`` — the within-bucket integral of the interpolant.
+        - ``candlesticks``: ``price``, ``volume``, ``tiebreak`` — OHLC,
+          volume and Σ price×volume (vwap).
+        - ``state_aggs``: ``state``, ``tiebreak`` — per-state LOCF held
+          durations.
+        - ``freq_aggs``: ``value``, ``capacity`` — a Misra–Gries heavy
+          hitter summary, exact while a bucket's distinct count fits.
+        - ``maxn_aggs``: ``value``, ``n``, ``desc``, optional ``by``
+          payload — the top-n candidate list.
+        - ``heartbeat_aggs``: ``liveness``, ``tiebreak`` — the union of
+          ``[t, t + liveness)`` intervals.
+        - ``tdigest_aggs``: ``value``, ``delta`` — ≤ delta k1-binned
+          centroids (Dunning & Ertl arXiv:1902.04023).
+
+        Any spec may instead be ``{"rollup_of": <parent column>}`` when
+        ``hypertable`` is another cagg's mat table: the child's state is
+        the merge of the parent's states (cagg_on_cagg.sql × toolkit
+        rollup), and the family's inherit rule copies what the state
+        shape depends on (method, alpha, liveness, n, delta, …).
         """
+        args = locals()  # the partial-family kwargs, by FAMILIES key
         if isinstance(hypertable, str):
             hypertable = Hypertable.get(ts, hypertable)
         cat = ts.catalog
@@ -459,278 +1206,40 @@ class ContinuousAggregate:
                     f"(tsl/src/continuous_aggs/common.c:1384)"
                 )
 
-        if sketches:
-            from .functions.ddsketch import _gamma
-
-            taken = set(aggs) | set(group_by) | {bucket_alias}
+        prow = cat.continuous_agg.find_one(mat_table=hypertable.name)
+        taken = set(aggs) | set(group_by) | {bucket_alias}
+        partials: dict[str, Optional[dict]] = {}
+        for fam in FAMILIES.values():
             norm: dict[str, dict] = {}
-            for col, spec in sketches.items():
+            for col, spec in (args[fam.key] or {}).items():
                 if col in taken:
                     raise ValueError(
-                        f"sketch column {col!r} collides with an agg/"
-                        f"group/bucket column"
-                    )
-                spec = dict(spec)
-                if "rollup_of" in spec:
-                    # hierarchical sketch cagg (cagg_on_cagg.sql over
-                    # toolkit rollup): the child's state is a lossless
-                    # merge of the PARENT's stored states — inherit the
-                    # parent sketch's alpha so quantile extraction uses
-                    # the same gamma
-                    prow = ts.catalog.continuous_agg.find_one(
-                        mat_table=hypertable.name
-                    )
-                    if prow is not None:
-                        _check_nesting(col, prow)
-                    if "alpha" not in spec:
-                        psk = ((prow or {}).get("sketches") or {}).get(
-                            spec["rollup_of"]
-                        )
-                        if psk is not None:
-                            spec["alpha"] = psk.get("alpha", 0.01)
-                elif "value" not in spec:
-                    raise ValueError(
-                        f"sketches[{col!r}] needs a 'value' expression "
-                        f"(or 'rollup_of' for a hierarchical rollup)"
-                    )
-                _gamma(float(spec.get("alpha", 0.01)))  # validates range
-                norm[col] = spec
-            sketches = norm
-        taken = set(aggs) | set(group_by) | {bucket_alias} | set(
-            sketches or {}
-        )
-        def _check_rollup(kind_key: str, col: str, spec: dict) -> dict:
-            # hierarchical child over a parent's stored partials
-            # (cagg_on_cagg.sql × the toolkit rollup idiom): the child
-            # bucket's state is the ordered/commutative merge of the
-            # parent's states — inherits the parent spec's method so
-            # serving uses the same interpolation
-            prow = cat.continuous_agg.find_one(mat_table=hypertable.name)
-            pspec = ((prow or {}).get(kind_key) or {}).get(
-                spec["rollup_of"]
-            )
-            if pspec is None:
-                raise ValueError(
-                    f"rollup_of={spec['rollup_of']!r}: the source "
-                    f"hypertable is not a cagg mat table with a "
-                    f"{kind_key} column of that name"
-                )
-            _check_nesting(col, prow)
-            out = dict(spec)
-            if kind_key == "time_weights" and "method" not in out:
-                out["method"] = pspec.get("method", "locf")
-            if kind_key == "stats_aggs":
-                # 2-D-ness is a property of the stored STATE SHAPE —
-                # the child merges whatever the parent stores, so it
-                # inherits the parent's dimensionality; a child spec
-                # declaring "y" over a 1-D parent would dispatch the
-                # comoment merge against (n, s, s2, mn, mx) and die at
-                # refresh with an opaque FIELD_NOT_FOUND
-                if "y" in pspec:
-                    out["y"] = pspec["y"]
-                elif "y" in out:
-                    raise ValueError(
-                        f"rollup_of={col!r}: parent stats column "
-                        f"{spec['rollup_of']!r} is 1-D — a 2-D child "
-                        f"cannot be built from 1-D moments (recreate "
-                        f"the parent with stats_aggs={{..., 'y': ...}})"
-                    )
-            if kind_key == "freq_aggs":
-                if "capacity" not in out:
-                    out["capacity"] = pspec.get("capacity", 256)
-                # a topn_agg parent records its declared n so the SQL
-                # route's bare topn(rollup(col)) serves it — a
-                # hierarchical child must inherit it too, or the child
-                # route silently falls back to the default 10
-                if "n" in pspec:
-                    out.setdefault("n", pspec["n"])
-            if kind_key == "heartbeat_aggs":
-                # stored live times depend on the liveness interval —
-                # a child cannot reinterpret the parent's states.
-                # Compare normalized MICROSECONDS, not spec text:
-                # '5 minutes' == '300 seconds' == 300000000
-                p_liv = pspec.get("liveness")
-
-                def _liv_us(v):
-                    return (
-                        int(v)
-                        if isinstance(v, int)
-                        else parse_interval(v).us
-                    )
-
-                if "liveness" in out and _liv_us(out["liveness"]) != _liv_us(
-                    p_liv
-                ):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child liveness must match "
-                        f"the parent's ({p_liv!r})"
-                    )
-                out["liveness"] = p_liv
-            if kind_key == "tdigest_aggs":
-                # the compression is a state property: a child merging
-                # parent centroids re-bins to its own delta, so it
-                # inherits the parent's unless explicitly (re)set; a
-                # larger child delta cannot invent resolution the
-                # parent states no longer hold, so reject it loudly
-                out.setdefault("delta", pspec.get("delta", 200))
-                if int(out["delta"]) > int(pspec.get("delta", 200)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child delta "
-                        f"({out['delta']}) cannot exceed the parent's "
-                        f"({pspec.get('delta', 200)}) — the parent "
-                        f"states only keep that many centroids"
-                    )
-            if kind_key == "maxn_aggs":
-                # the candidate-list length and direction are state
-                # properties — a child cannot keep MORE than the parent
-                out.setdefault("n", pspec.get("n", 5))
-                out.setdefault("desc", pspec.get("desc", True))
-                if pspec.get("by") is not None:
-                    # payload presence travels: the child merges the
-                    # parent's (value, data) entries
-                    out.setdefault("by", pspec["by"])
-                if int(out["n"]) > int(pspec.get("n", 5)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child n ({out['n']}) cannot "
-                        f"exceed the parent's ({pspec.get('n', 5)}) — "
-                        f"the parent states only keep that many values"
-                    )
-                if bool(out["desc"]) != bool(pspec.get("desc", True)):
-                    raise ValueError(
-                        f"rollup_of={col!r}: child direction must match "
-                        f"the parent's (desc={pspec.get('desc', True)})"
-                    )
-            return out
-
-        kind_keys = {
-            "counter": "counters",
-            "gauge": "gauges",
-            "stats": "stats_aggs",
-            "time_weight": "time_weights",
-            "freq": "freq_aggs",
-            "maxn": "maxn_aggs",
-            "tdigest": "tdigest_aggs",
-        }
-        norm_families: dict[str, dict] = {}
-        for kind, d in (
-            ("counter", counters),
-            ("gauge", gauges),
-            ("stats", stats_aggs),
-            ("time_weight", time_weights),
-            ("freq", freq_aggs),
-            ("maxn", maxn_aggs),
-            ("tdigest", tdigest_aggs),
-        ):
-            normd: dict[str, dict] = {}
-            for col, spec in (d or {}).items():
-                if col in taken:
-                    raise ValueError(
-                        f"{kind} column {col!r} collides with another "
-                        f"output column"
+                        f"{fam.label} column {col!r} collides with "
+                        f"another output column"
                     )
                 taken.add(col)
+                spec = dict(spec)
                 if "rollup_of" in spec:
-                    spec = _check_rollup(kind_keys[kind], col, spec)
-                elif "value" not in spec:
-                    raise ValueError(
-                        f"{kind} partial {col!r} needs a 'value' "
-                        f"expression (or 'rollup_of' for a hierarchical "
-                        f"rollup)"
+                    # hierarchical child over the parent's stored states
+                    pspec = ((prow or {}).get(fam.key) or {}).get(
+                        spec["rollup_of"]
                     )
-                if kind == "time_weight":
-                    method = str(spec.get("method", "locf")).lower()
-                    if method not in ("locf", "linear"):
+                    if pspec is None:
                         raise ValueError(
-                            f"time_weight {col!r}: method must be 'locf' "
-                            f"or 'linear', got {spec.get('method')!r}"
+                            f"rollup_of={spec['rollup_of']!r}: the source "
+                            f"hypertable is not a cagg mat table with a "
+                            f"{fam.key} column of that name"
                         )
-                if kind == "freq" and int(spec.get("capacity", 256)) <= 0:
+                    _check_nesting(col, prow)
+                    spec = fam.inherit(col, spec, pspec)
+                elif fam.required not in spec:
                     raise ValueError(
-                        f"freq_agg {col!r}: capacity must be positive"
+                        f"{fam.label} partial {col!r} needs a "
+                        f"{fam.required!r} expression (or 'rollup_of' for "
+                        f"a hierarchical rollup)"
                     )
-                if kind == "maxn" and int(spec.get("n", 5)) <= 0:
-                    raise ValueError(
-                        f"max_n {col!r}: n must be positive"
-                    )
-                if kind == "tdigest" and int(spec.get("delta", 200)) < 2:
-                    raise ValueError(
-                        f"tdigest {col!r}: delta (compression) must "
-                        f"be >= 2"
-                    )
-                normd[col] = spec
-            norm_families[kind_keys[kind]] = normd or None
-        counters = norm_families["counters"]
-        gauges = norm_families["gauges"]
-        stats_aggs = norm_families["stats_aggs"]
-        time_weights = norm_families["time_weights"]
-        freq_aggs = norm_families["freq_aggs"]
-        maxn_aggs = norm_families["maxn_aggs"]
-        tdigest_aggs = norm_families["tdigest_aggs"]
-        norm_c: dict[str, dict] = {}
-        for col, spec in (candlesticks or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"candlestick column {col!r} collides with another "
-                    f"output column"
-                )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("candlesticks", col, spec)
-            elif "price" not in spec:
-                raise ValueError(
-                    f"candlestick partial {col!r} needs a 'price' "
-                    f"expression (or 'rollup_of')"
-                )
-            norm_c[col] = spec
-        candlesticks = norm_c or None
-        norm_hb: dict[str, dict] = {}
-        for col, spec in (heartbeat_aggs or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"heartbeat column {col!r} collides with another "
-                    f"output column"
-                )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("heartbeat_aggs", col, spec)
-            elif "liveness" not in spec:
-                raise ValueError(
-                    f"heartbeat partial {col!r} needs a 'liveness' "
-                    f"interval (or 'rollup_of')"
-                )
-            liv = spec["liveness"]
-            liv_us = (
-                int(liv)
-                if isinstance(liv, int)
-                else parse_interval(liv).us
-            )
-            if liv_us <= 0 or (
-                not isinstance(liv, int) and parse_interval(liv).months
-            ):
-                raise ValueError(
-                    f"heartbeat {col!r}: liveness must be a positive "
-                    f"fixed-width interval"
-                )
-            spec = {**spec, "liveness_us": liv_us}
-            norm_hb[col] = spec
-        heartbeat_aggs = norm_hb or None
-        norm_sa: dict[str, dict] = {}
-        for col, spec in (state_aggs or {}).items():
-            if col in taken:
-                raise ValueError(
-                    f"state_agg column {col!r} collides with another "
-                    f"output column"
-                )
-            taken.add(col)
-            if "rollup_of" in spec:
-                spec = _check_rollup("state_aggs", col, spec)
-            elif "state" not in spec:
-                raise ValueError(
-                    f"state_agg partial {col!r} needs a 'state' "
-                    f"expression (or 'rollup_of')"
-                )
-            norm_sa[col] = spec
-        state_aggs = norm_sa or None
+                norm[col] = fam.normalize(col, spec)
+            partials[fam.key] = norm or None
         tcol = time_column or hypertable.time_column
         is_uuid = hypertable.row.get("time_type") == "uuid"
         # UUIDv7 dimensions bucket by their embedded timestamp, so the
@@ -760,17 +1269,7 @@ class ContinuousAggregate:
             "where": where,
             "join": join,
             "window_fns": window_fns,
-            "sketches": sketches,
-            "counters": counters,
-            "gauges": gauges,
-            "stats_aggs": stats_aggs,
-            "time_weights": time_weights,
-            "candlesticks": candlesticks,
-            "state_aggs": state_aggs,
-            "freq_aggs": freq_aggs,
-            "maxn_aggs": maxn_aggs,
-            "heartbeat_aggs": heartbeat_aggs,
-            "tdigest_aggs": tdigest_aggs,
+            **partials,
             "mat_table": f"_mat_{name}",
             "created_at": _time.time(),
         }
@@ -790,10 +1289,7 @@ class ContinuousAggregate:
         # chunk_time_interval=...) analog, create.c:619-623).
         nominal_us = iv.us if not iv.months else iv.months * 31 * 86_400_000_000
         src_interval = int(hypertable.row.get("chunk_interval") or 0)
-        is_hier = (
-            cat.continuous_agg.find_one(mat_table=hypertable.name)
-            is not None
-        )
+        is_hier = prow is not None
         if mat_chunk_interval is not None:
             mat_interval = (
                 int(mat_chunk_interval)
@@ -934,53 +1430,29 @@ class ContinuousAggregate:
         ]
         keys = [self.row["bucket_alias"], *self.row["group_by"]]
         partials = [
-            (col, spec, self._sketch_state)
-            for col, spec in (self.row.get("sketches") or {}).items()
-        ] + [
-            (col, spec, self._counter_state)
-            for col, spec in (self.row.get("counters") or {}).items()
-        ] + [
-            (col, spec, self._gauge_state)
-            for col, spec in (self.row.get("gauges") or {}).items()
-        ] + [
-            (col, spec, self._stats_state)
-            for col, spec in (self.row.get("stats_aggs") or {}).items()
-        ] + [
-            (col, spec, self._timeweight_state)
-            for col, spec in (self.row.get("time_weights") or {}).items()
-        ] + [
-            (col, spec, self._candlestick_state)
-            for col, spec in (self.row.get("candlesticks") or {}).items()
-        ] + [
-            (col, spec, self._stateagg_state)
-            for col, spec in (self.row.get("state_aggs") or {}).items()
-        ] + [
-            (col, spec, self._freq_state)
-            for col, spec in (self.row.get("freq_aggs") or {}).items()
-        ] + [
-            (col, spec, self._maxn_state)
-            for col, spec in (self.row.get("maxn_aggs") or {}).items()
-        ] + [
-            (col, spec, self._heartbeat_state)
-            for col, spec in (self.row.get("heartbeat_aggs") or {}).items()
-        ] + [
-            (col, spec, self._tdigest_state)
-            for col, spec in (self.row.get("tdigest_aggs") or {}).items()
+            (col, spec, fam.shape(spec))
+            for fam in FAMILIES.values()
+            for col, spec in (self.row.get(fam.key) or {}).items()
+            if only_cols is None or col in only_cols
         ]
-        if only_cols is not None:
-            partials = [p for p in partials if p[0] in only_cols]
         agg = None
         if exprs or not partials:
             agg = raw.groupBy(
                 self._bucket_expr(raw), *self.row["group_by"]
             ).agg(*exprs)
-        for col, spec, builder in partials:
-            # every builder is null-aware internally: it emits a row
-            # for EVERY (bucket, group) of the raw rows, with a NULL
-            # state when the partial's inputs are all NULL (strict PG
-            # aggregate semantics) — so this join chain is always 1:1
-            # and inner, the r10-proven plan shape
-            sk = builder(raw, col, spec)
+        for col, spec, fam in partials:
+            # every builder and merge is null-aware: it emits a row for
+            # EVERY (bucket, group) of its input, with a NULL state when
+            # the partial's inputs are all NULL (strict PG aggregate
+            # semantics) — so this join chain is always 1:1 and inner,
+            # the r10-proven plan shape
+            if spec.get("rollup_of"):
+                sk = fam.merge(
+                    self._rollup_frame(raw, spec["rollup_of"]),
+                    keys, spec, col,
+                )
+            else:
+                sk = getattr(self, fam.state)(raw, col, spec)
             if agg is None:
                 agg = sk
                 continue
@@ -993,12 +1465,9 @@ class ContinuousAggregate:
             # (duplicate key columns), while a rename Project on top of
             # the partial's struct aggregate trips Spark 4.1.2's
             # RemoveRedundantAliases (d42cb25)
-            l, r = agg.alias("_pl"), sk.alias("_pr")
-            cond = None
-            for k in keys:
-                c = F.col(f"_pl.{k}").eqNullSafe(F.col(f"_pr.{k}"))
-                cond = c if cond is None else cond & c
-            agg = l.join(r, cond).select("_pl.*", F.col(f"_pr.{col}"))
+            agg = _join_keys(agg, sk, keys).select(
+                "_jl.*", F.col(f"_jr.{col}")
+            )
         if only_cols is None:
             for col, expr in (self.row.get("window_fns") or {}).items():
                 agg = agg.withColumn(col, F.expr(expr))
@@ -1014,39 +1483,6 @@ class ContinuousAggregate:
         survives past the first partial aggregation."""
         from .functions.ddsketch import ZERO_BUCKET, _gamma
 
-        src = spec.get("rollup_of")
-        if src:
-            # hierarchical rollup: merge the parent's stored states —
-            # explode (keys, map) -> (keys, log-bucket, cnt), sum. Bucket
-            # counts ADD losslessly (Masson VLDB'19 §2.3), so the child
-            # state is bit-identical to one built from the raw rows.
-            # explode_outer: a NULL parent state (strict-NULL group)
-            # yields a NULL _sb row, so the group row survives into the
-            # child with a NULL state instead of vanishing
-            per_bucket = (
-                raw.select(
-                    self._bucket_expr(raw),
-                    *self.row["group_by"],
-                    F.explode_outer(F.col(src)).alias("_sb", "_c"),
-                )
-                .groupBy(
-                    self.row["bucket_alias"], *self.row["group_by"], "_sb"
-                )
-                .agg(F.sum("_c").alias("_cnt"))
-            )
-            ent = F.when(
-                F.col("_sb").isNotNull(), F.struct("_sb", "_cnt")
-            )
-            return per_bucket.groupBy(
-                self.row["bucket_alias"], *self.row["group_by"]
-            ).agg(
-                F.when(
-                    F.count("_sb") > 0,
-                    F.map_from_entries(
-                        F.array_sort(F.collect_list(ent))
-                    ),
-                ).alias(col)
-            )
         g = _gamma(float(spec.get("alpha", 0.01)))
         v = F.expr(spec["value"]).cast("double")
         # strict-aggregate NULL semantics (percentile_agg skips NULLs):
@@ -1106,8 +1542,6 @@ class ContinuousAggregate:
         here — merging adjacent partials adds exactly one boundary step
         (``counter_at_grain``), which is what makes any-grain serving
         equal to ``counter_agg`` over the raw rows of that grain."""
-        if spec.get("rollup_of"):
-            return self._merge_counter_states(raw, col, spec["rollup_of"])
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
         tb = list(spec.get("tiebreak") or ())
@@ -1226,119 +1660,12 @@ class ContinuousAggregate:
         whole parent buckets (bucket-aligned ``[start, end)``).
 
         Output: ``(bucket?, group…, n, delta, rate, num_resets,
-        first_us, last_us)``; ``grain=None`` keeps the cagg's own grain,
-        ``"all"`` collapses to one row per group."""
-        from .functions.time import time_bucket
-
-        counters = self.row.get("counters") or {}
-        if not counters:
-            raise ValueError(
-                f"cagg {self.name!r} has no counter columns (pass "
-                f"counters= to create_cagg)"
-            )
-        if counter_col is None:
-            if len(counters) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several counters "
-                    f"{sorted(counters)}; pass counter_col"
-                )
-            counter_col = next(iter(counters))
-        if counter_col not in counters:
-            raise KeyError(f"no counter column {counter_col!r}")
-        self._require_full_group_by(group_by, "counter")
-        bucket = self.row["bucket_alias"]
-        gb = list(self.row["group_by"] if group_by is None else group_by)
-
-        df = self.read(realtime=realtime, only_cols=[counter_col])
-        if start is not None or end is not None:
-            bc = F.col(bucket)
-            if self.row["time_is_timestamp"]:
-                conv = lambda x: F.lit(x).cast("timestamp")  # noqa: E731
-            else:
-                conv = lambda x: F.lit(int(x))  # noqa: E731
-            if start is not None:
-                df = df.filter(bc >= conv(start))
-            if end is not None:
-                df = df.filter(bc < conv(end))
-        src_bucket = F.col(bucket)
-        grain_all = grain == "all"
-        tcols = [] if grain_all else ["_tgt"]
-        if grain == "all":
-            tgt = None
-            keys: list = list(gb)
-        elif grain is not None:
-            if not self.row["time_is_timestamp"]:
-                from .functions.time import time_bucket_int
-
-                tgt = time_bucket_int(int(grain), bucket)
-            else:
-                tgt = time_bucket(grain, bucket)
-            keys = [bucket, *gb]
-        else:
-            tgt = src_bucket
-            keys = [bucket, *gb]
-        # strict rollup: skip NULL states (all-NULL-input groups); the
-        # filter sits after the rename select, not on the mat read —
-        # see _partial_frame_for_col
-        d = df.select(
-            *([] if tgt is None else [tgt.alias("_tgt")]),
-            src_bucket.alias("_src"),
-            *gb,
-            F.col(counter_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
-        # one boundary step per adjacent pair of parent buckets inside a
-        # target bucket: reset-adjusted first-vs-previous-last.
-        # SQL-string expression build (round 17, see _over).
-        gbq = [_q(g) for g in gb]
-        wo = _over([*tcols, *gb], ["_src ASC"])
-        prev_last = f"lag(_st.last_val) OVER ({wo})"
-        bstep = f"(_st.first_val - {prev_last})"
-        binc = (
-            f"CASE WHEN {prev_last} IS NULL THEN 0.0D "
-            f"WHEN {bstep} < 0 THEN _st.first_val ELSE {bstep} END"
+        num_changes, first_us, last_us, first_val, last_val)``;
+        ``grain=None`` keeps the cagg's own grain, ``"all"`` collapses
+        to one row per group."""
+        return self._serve(
+            _COUNTERS, counter_col, grain, group_by, realtime, start, end
         )
-        d = d.selectExpr(
-            *tcols,
-            *gbq,
-            "_src",
-            "_st",
-            f"{binc} AS _binc",
-            f"CAST(({bstep} < 0) AS INT) AS _breset",
-            f"CASE WHEN {prev_last} IS NOT NULL THEN "
-            f"CAST((_st.first_val != {prev_last}) AS INT) END AS _bchange",
-        )
-        span_s = (
-            "(CAST((max(_st.last_us) - min(_st.first_us)) AS DOUBLE) "
-            "/ 1000000.0D)"
-        )
-        out = d.groupBy(*tcols, *gb).agg(
-            F.expr("sum(_st.n)").alias("n"),
-            F.expr("sum(_st.delta) + sum(_binc)").alias("delta"),
-            F.expr(
-                f"CASE WHEN {span_s} > 0 THEN "
-                f"(sum(_st.delta) + sum(_binc)) / {span_s} END"
-            ).alias("rate"),
-            F.expr(
-                "sum(_st.num_resets) + coalesce(sum(_breset), 0)"
-            ).alias("num_resets"),
-            (
-                F.expr(
-                    "sum(_st.num_changes) + coalesce(sum(_bchange), 0)"
-                )
-                if _struct_has_field(d, "_st", "num_changes")
-                else F.lit(None).cast("long")
-            ).alias("num_changes"),
-            F.expr("min(_st.first_us)").alias("first_us"),
-            F.expr("max(_st.last_us)").alias("last_us"),
-            # toolkit first_val/last_val accessors: bookends from the
-            # earliest/latest parent partial (_src is unique per parent
-            # within a series)
-            F.expr("min_by(_st.first_val, _src)").alias("first_val"),
-            F.expr("max_by(_st.last_val, _src)").alias("last_val"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def _gauge_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
         """Mergeable GAUGE partial per (bucket, group): like the counter
@@ -1347,8 +1674,6 @@ class ContinuousAggregate:
         the last) so idelta/irate survive the rollup — a single-sample
         bucket's step comes from the previous bucket's last value at
         merge time."""
-        if spec.get("rollup_of"):
-            return self._merge_gauge_states(raw, col, spec["rollup_of"])
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
         tb = list(spec.get("tiebreak") or ())
@@ -1433,83 +1758,10 @@ class ContinuousAggregate:
         ``gauge_agg`` over the raw rows of the target grain.
 
         Output: ``(bucket?, group…, n, delta, rate, idelta, irate,
-        first_us, last_us)``."""
-        from pyspark.sql import Window
-
-        self._require_full_group_by(group_by, "gauge")
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "gauges", gauge_col, grain, group_by, realtime, start, end
+        first_us, last_us, first_val, last_val, num_changes)``."""
+        return self._serve(
+            _GAUGES, gauge_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(F.col("_src").asc())
-        prev_last_val = F.lag(st["last_val"]).over(w)
-        prev_last_us = F.lag(st["last_us"]).over(w)
-        cand_idelta = F.coalesce(
-            st["last_step"], st["first_val"] - prev_last_val
-        )
-        cand_prev_us = F.coalesce(st["last_prev_us"], prev_last_us)
-        has_changes = _struct_has_field(d, "_st", "num_changes")
-        d = d.select(
-            *tcols,
-            *keys_gb,
-            "_src",
-            st.alias("_st"),
-            cand_idelta.alias("_cid"),
-            cand_prev_us.alias("_cpu"),
-            # one boundary change per adjacent parent pair (the counter
-            # serve's _bchange; gauge num_changes counts value changes)
-            F.when(
-                prev_last_val.isNotNull(),
-                (st["first_val"] != prev_last_val).cast("int"),
-            ).alias("_bchange"),
-        )
-        # per-component min_by/max_by keyed on the parent bucket (_src,
-        # unique within the target group → all components come from one
-        # row). NO struct bundling here: an aliased-field struct inside
-        # an aggregate over the dual-partial join trips Spark's
-        # RemoveRedundantAliases into an unresolved plan (observed on
-        # 4.1.2 with a projection on top).
-        first_v = F.min_by(st["first_val"], F.col("_src"))
-        last_v = F.max_by(st["last_val"], F.col("_src"))
-        last_cid = F.max_by(F.col("_cid"), F.col("_src"))
-        last_cpu = F.max_by(F.col("_cpu"), F.col("_src"))
-        span_s = (
-            F.max(st["last_us"]) - F.min(st["first_us"])
-        ).cast("double") / 1e6
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            F.sum(st["n"]).alias("n"),
-            (last_v - first_v).alias("delta"),
-            F.when(
-                span_s > 0,
-                (last_v - first_v) / span_s,
-            ).alias("rate"),
-            last_cid.alias("idelta"),
-            F.when(
-                last_cpu.isNotNull()
-                & ((F.max(st["last_us"]) - last_cpu) > 0),
-                last_cid
-                / (
-                    (F.max(st["last_us"]) - last_cpu).cast("double")
-                    / 1e6
-                ),
-            ).alias("irate"),
-            F.min(st["first_us"]).alias("first_us"),
-            F.max(st["last_us"]).alias("last_us"),
-            first_v.alias("first_val"),
-            last_v.alias("last_val"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if has_changes
-                else F.lit(None).cast("long")
-            ).alias("num_changes"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def _stats_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
         """Mergeable 1-D STATS partial per (bucket, group):
@@ -1517,12 +1769,6 @@ class ContinuousAggregate:
         parallel-aggregation decomposition (also how Spark's own
         partial aggregates merge). A spec with a ``"y"`` key builds the
         TWO-variable form instead (:meth:`_stats2d_state`)."""
-        if spec.get("rollup_of"):
-            return self._merge_stats_states(
-                raw, col, spec["rollup_of"], two_d="y" in spec
-            )
-        if "y" in spec:
-            return self._stats2d_state(raw, col, spec)
         v = F.expr(spec["value"]).cast("double")
         # strict NULL semantics: the moments already skip NULLs (count/
         # sum/min/max are null-skipping); an all-NULL group's state is
@@ -1591,7 +1837,7 @@ class ContinuousAggregate:
         )
 
     def _is_stats2d(self, col: str) -> bool:
-        spec = (self.row.get("stats_aggs") or {}).get(col)
+        spec = (self.row.get(_STATS.key) or {}).get(col)
         return bool(spec) and "y" in spec
 
     def stats_at_grain(
@@ -1606,12 +1852,12 @@ class ContinuousAggregate:
         """Serve 1-D statistics at any coarser grain from the stored
         moments partials (toolkit ``rollup(stats_agg(...))``
         accessors): fieldwise add/min/max merge, then
-        n/sum/avg/stddev/variance (sample)/min/max extraction."""
+        n/sum/avg/stddev/variance (sample)/min/max extraction. Subset
+        ``group_by`` regrouping is allowed (commutative states)."""
         if stats_col is None:
             # resolve BEFORE the 2-D guard, or a cagg whose only stats
-            # column is 2-D slips into the 1-D serve and dies with an
-            # opaque FIELD_NOT_FOUND on the comoment struct
-            specs = self.row.get("stats_aggs") or {}
+            # column is 2-D slips into the 1-D serve
+            specs = self.row.get(_STATS.key) or {}
             if len(specs) == 1:
                 stats_col = next(iter(specs))
         if stats_col is not None and self._is_stats2d(stats_col):
@@ -1619,31 +1865,9 @@ class ContinuousAggregate:
                 f"{stats_col!r} is a 2-D stats partial — use "
                 f"stats2d_at_grain for slope/intercept/corr/covariance"
             )
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "stats_aggs", stats_col, grain, group_by, realtime, start, end
+        return self._serve(
+            _STATS, stats_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        n = F.sum(st["n"])
-        s = F.sum(st["s"])
-        s2 = F.sum(st["s2"])
-        # sample variance; clamp tiny negative float residue, keep NULL
-        # (not 0) for n <= 1 like stddev_samp
-        var = F.when(
-            n > 1, F.greatest((s2 - s * s / n) / (n - F.lit(1)), F.lit(0.0))
-        )
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            n.alias("n"),
-            s.alias("sum"),
-            F.when(n > 0, s / n).alias("avg"),
-            F.sqrt(var).alias("stddev"),
-            var.alias("variance"),
-            F.min(st["mn"]).alias("min"),
-            F.max(st["mx"]).alias("max"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def stats2d_at_grain(
         self,
@@ -1657,14 +1881,12 @@ class ContinuousAggregate:
         """Serve 2-D linear-regression statistics at any coarser grain
         from the stored comoment partials — the toolkit
         ``stats_agg(y, x) → rollup → slope()/intercept()/corr()``
-        idiom (the regression-over-time dashboard query; PG's
-        ``regr_*`` family). Fieldwise sums merge, then the standard
-        comoment corrections: ``Cxy = Σxy − ΣxΣy/n`` etc. With
-        integer-quantized inputs every sum is exact, so the final
+        idiom (PG's ``regr_*`` family). Fieldwise sums merge, then the
+        standard comoment corrections: ``Cxy = Σxy − ΣxΣy/n`` etc.
+        With integer-quantized inputs every sum is exact, so the final
         divisions are IEEE-deterministic and a SQL replay of the same
-        formulas matches bit-for-bit (the q_cagg_stats discipline).
-        Subset ``group_by`` regrouping is allowed — comoments are
-        commutative states.
+        formulas matches bit-for-bit. Subset ``group_by`` regrouping is
+        allowed.
 
         Output: ``(bucket?, group…, n, average_x, average_y, sum_x,
         sum_y, slope, intercept, covariance, corr,
@@ -1674,7 +1896,7 @@ class ContinuousAggregate:
         if stats_col is None:
             two_d = [
                 c
-                for c, sp in (self.row.get("stats_aggs") or {}).items()
+                for c, sp in (self.row.get(_STATS.key) or {}).items()
                 if "y" in sp
             ]
             if len(two_d) != 1:
@@ -1688,47 +1910,9 @@ class ContinuousAggregate:
                 f"{stats_col!r} is not a 2-D stats partial (create "
                 f"with stats_aggs={{col: {{'value': x, 'y': y}}}})"
             )
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            stats_col, grain, group_by, realtime, start, end
+        return self._serve(
+            _STATS, stats_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        n = F.sum(st["n"])
-        sx = F.sum(st["sx"])
-        sy = F.sum(st["sy"])
-        sxx = F.sum(st["sxx"])
-        syy = F.sum(st["syy"])
-        sxy = F.sum(st["sxy"])
-        # comoment corrections; clamp float residue like stats_at_grain.
-        # nullif denominators, not when-guards: ANSI divide-by-zero
-        # fires even inside an unreached CaseWhen branch under codegen
-        # subexpression elimination, while x / NULL is cleanly NULL —
-        # the same semantics (degenerate x → NULL slope/corr, n ≤ 1 →
-        # NULL covariance, regr_slope/covar_samp behavior)
-        cxx = F.greatest(sxx - sx * sx / n, F.lit(0.0))
-        cyy = F.greatest(syy - sy * sy / n, F.lit(0.0))
-        cxy = sxy - sx * sy / n
-        slope = cxy / F.nullif(cxx, F.lit(0.0))
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            n.alias("n"),
-            (sx / n).alias("average_x"),
-            (sy / n).alias("average_y"),
-            sx.alias("sum_x"),
-            sy.alias("sum_y"),
-            slope.alias("slope"),
-            ((sy - slope * sx) / n).alias("intercept"),
-            (
-                cxy / F.nullif((n - F.lit(1)).cast("double"), F.lit(0.0))
-            ).alias("covariance"),
-            (cxy / F.nullif(F.sqrt(cxx * cyy), F.lit(0.0))).alias("corr"),
-            F.coalesce(
-                cxy * cxy / F.nullif(cxx * cyy, F.lit(0.0)),
-                F.when((cxx > 0) & (cyy == F.lit(0.0)), F.lit(1.0)),
-            ).alias("determination_coefficient"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def _timeweight_state(
         self, raw: DataFrame, col: str, spec: dict
@@ -1746,13 +1930,6 @@ class ContinuousAggregate:
         target grain. Strict NULL semantics like the other families
         (functions/counters.py:time_weighted_avg is the raw-scan
         analog)."""
-        if spec.get("rollup_of"):
-            return self._merge_timeweight_states(
-                raw,
-                col,
-                spec["rollup_of"],
-                str(spec.get("method", "locf")).lower(),
-            )
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
         tb = list(spec.get("tiebreak") or ())
@@ -1850,61 +2027,16 @@ class ContinuousAggregate:
         """
         from pyspark.sql import Window
 
-        from .functions.time import parse_interval
-
-        tws = self.row.get("time_weights") or {}
-        if not tws:
-            raise ValueError(
-                f"cagg {self.name!r} has no time_weight columns"
-            )
-        if tw_col is None:
-            if len(tws) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several time_weights "
-                    f"{sorted(tws)}; pass tw_col"
-                )
-            tw_col = next(iter(tws))
-        if tw_col not in tws:
-            raise KeyError(f"no time_weight column {tw_col!r}")
-        if str(tws[tw_col].get("method", "locf")).lower() != "locf":
+        tw_col, spec = self._family_col(_TIME_WEIGHTS, tw_col)
+        if str(spec.get("method", "locf")).lower() != "locf":
             raise ValueError(
                 "interpolated_average_at_grain needs a LOCF time_weight "
                 "(linear interpolation across gaps is interpolated_delta "
                 "territory)"
             )
-        if grain is None:
-            raise ValueError(
-                "interpolated_average_at_grain needs an explicit grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
+        width, base = self._interp_base(_TIME_WEIGHTS, tw_col, grain, realtime)
         gb = list(self.row["group_by"])
         bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[tw_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb,
-            src_us.alias("_src"),
-            F.col(tw_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
         st = F.col("_st")
         w = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
         prev_last_us = F.lag(st["last_us"]).over(w)
@@ -2005,55 +2137,10 @@ class ContinuousAggregate:
         Output: ``(bucket, group…, delta, rate)``."""
         from pyspark.sql import Window
 
-        from .functions.time import parse_interval
-
-        counters = self.row.get("counters") or {}
-        if not counters:
-            raise ValueError(
-                f"cagg {self.name!r} has no counter columns"
-            )
-        if counter_col is None:
-            if len(counters) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several counters "
-                    f"{sorted(counters)}; pass counter_col"
-                )
-            counter_col = next(iter(counters))
-        if counter_col not in counters:
-            raise KeyError(f"no counter column {counter_col!r}")
-        if grain is None:
-            raise ValueError(
-                "interpolated_delta_at_grain needs an explicit grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
+        counter_col, _ = self._family_col(_COUNTERS, counter_col)
+        width, base = self._interp_base(_COUNTERS, counter_col, grain, realtime)
         gb = list(self.row["group_by"])
         bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[counter_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb,
-            src_us.alias("_src"),
-            F.col(counter_col).alias("_st"),
-        ).filter(F.col("_st").isNotNull())
         st = F.col("_st")
         w = Window.partitionBy(*gb).orderBy(F.col("_src").asc())
         prev_last = F.lag(st["last_val"]).over(w)
@@ -2166,79 +2253,9 @@ class ContinuousAggregate:
         functions/counters.py:time_weighted_avg).
 
         Output: ``(bucket?, group…, tw_avg, n, first_us, last_us)``."""
-        from pyspark.sql import Window
-
-        tws = self.row.get("time_weights") or {}
-        if not tws:
-            raise ValueError(
-                f"cagg {self.name!r} has no time_weight columns (pass "
-                f"time_weights= to create_cagg)"
-            )
-        if tw_col is None:
-            if len(tws) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several time_weights "
-                    f"{sorted(tws)}; pass tw_col"
-                )
-            tw_col = next(iter(tws))
-        if tw_col not in tws:
-            raise KeyError(f"no time_weight column {tw_col!r}")
-        # LOCF/linear boundary segments are only meaningful within one
-        # series — same mergeability constraint as counters/gauges
-        self._require_full_group_by(group_by, "time_weighted")
-        method = str(tws[tw_col].get("method", "locf")).lower()
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            tw_col, grain, group_by, realtime, start, end
+        return self._serve(
+            _TIME_WEIGHTS, tw_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        w = Window.partitionBy(*tcols, *keys_gb).orderBy(F.col("_src").asc())
-        prev_last_val = F.lag(st["last_val"]).over(w)
-        prev_last_us = F.lag(st["last_us"]).over(w)
-        bdt = (st["first_us"] - prev_last_us).cast("double")
-        if method == "linear":
-            bseg = (prev_last_val + st["first_val"]) / F.lit(2.0) * bdt
-        else:
-            bseg = prev_last_val * bdt
-        d = d.select(
-            *tcols,
-            *keys_gb,
-            "_src",
-            st.alias("_st"),
-            F.coalesce(bseg, F.lit(0.0)).alias("_bseg"),
-        )
-        # flat aggregate + compute-in-projection (the state builders'
-        # discipline): a when/otherwise around aggregates inside agg()
-        # trips Spark 4.1.2's RemoveRedundantAliases under the
-        # multi-partial join + projection shape (d42cb25 family)
-        flat = d.groupBy(*tcols, *keys_gb).agg(
-            (F.sum(st["integral"]) + F.sum("_bseg")).alias("_f_integral"),
-            F.min_by(st["first_val"], F.col("_src")).alias("_f_first_val"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-        )
-        # nullif/coalesce instead of when/otherwise: pruning a CaseWhen
-        # output column through this union+window+aggregate stack is
-        # exactly what flips RemoveRedundantAliases into an unresolved
-        # plan on 4.1.2 (isolated empirically — projecting the sibling
-        # plain columns is fine); x / NULL is NULL under ANSI, so the
-        # semantics are identical
-        span = (F.col("_f_last_us") - F.col("_f_first_us")).cast("double")
-        out = flat.select(
-            *tcols,
-            *keys_gb,
-            F.coalesce(
-                F.col("_f_integral") / F.nullif(span, F.lit(0.0)),
-                F.col("_f_first_val"),
-            ).alias("tw_avg"),
-            F.col("_f_n").alias("n"),
-            F.col("_f_first_us").alias("first_us"),
-            F.col("_f_last_us").alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def _candlestick_state(
         self, raw: DataFrame, col: str, spec: dict
@@ -2252,10 +2269,6 @@ class ContinuousAggregate:
         raw-scan analog); every field merges losslessly across
         adjacent buckets, making :meth:`candlestick_at_grain` exact at
         any grain. Strict NULL semantics: NULL prices are skipped."""
-        if spec.get("rollup_of"):
-            return self._merge_candlestick_states(
-                raw, col, spec["rollup_of"]
-            )
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
         tb = list(spec.get("tiebreak") or ())
@@ -2326,45 +2339,20 @@ class ContinuousAggregate:
         stored partials — the toolkit ``rollup(candlestick_agg(...))``
         idiom. Parent buckets partition time disjointly, so the target
         bucket's open comes from its EARLIEST parent partial and its
-        close from the LATEST (keyed on the partial's own first/last
-        sample time — ``_src`` is unique per parent bucket within a
-        group); high/low/volume/pv merge commutatively, so subset
-        ``group_by`` regrouping is allowed (unlike counters/gauges,
-        nothing here depends on a single series' ordering beyond the
-        disjoint buckets). When a subset ``group_by`` merges SERIES
-        that share a first/last sample timestamp, the per-series
-        tiebreak columns are not recoverable from the partials, so
-        the equal-time winner is instead chosen deterministically by
-        price value: ties on ``first_us`` take the LOWEST open, ties
-        on ``last_us`` the HIGHEST close (exact only when equal-time
-        ties carry equal prices — same caveat as the toolkit's
-        unspecified equal-time ordering).
+        close from the LATEST; high/low/volume/pv merge commutatively,
+        so subset ``group_by`` regrouping is allowed. When a subset
+        ``group_by`` merges SERIES that share a first/last sample
+        timestamp, the per-series tiebreak columns are not recoverable
+        from the partials, so ties on ``first_us`` take the LOWEST open
+        and ties on ``last_us`` the HIGHEST close (exact only when
+        equal-time ties carry equal prices — the toolkit's equal-time
+        ordering is unspecified too).
 
         Output: ``(bucket?, group…, open, high, low, close, volume,
         vwap, n, first_us, last_us)``."""
-        d, keys_gb, bucket, grain_all = self._partial_frame(
-            "candlesticks", candle_col, grain, group_by, realtime, start, end
+        return self._serve(
+            _CANDLESTICKS, candle_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        st = F.col("_st")
-        out = d.groupBy(*tcols, *keys_gb).agg(
-            F.min_by(
-                st["open"], F.struct(st["first_us"], st["open"])
-            ).alias("open"),
-            F.max(st["high"]).alias("high"),
-            F.min(st["low"]).alias("low"),
-            F.max_by(
-                st["close"], F.struct(st["last_us"], st["close"])
-            ).alias("close"),
-            F.sum(st["volume"]).alias("volume"),
-            (F.sum(st["pv"]) / F.sum(st["volume"])).alias("vwap"),
-            F.sum(st["n"]).alias("n"),
-            F.min(st["first_us"]).alias("first_us"),
-            F.max(st["last_us"]).alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def _stateagg_state(
         self, raw: DataFrame, col: str, spec: dict
@@ -2378,10 +2366,6 @@ class ContinuousAggregate:
         Strict NULL semantics: NULL-state samples are skipped (they
         neither hold time nor break the LOCF chain); an all-NULL group
         keeps its row with a NULL state."""
-        if spec.get("rollup_of"):
-            return self._merge_stateagg_states(
-                raw, col, spec["rollup_of"]
-            )
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
         tb = list(spec.get("tiebreak") or ())
@@ -2481,9 +2465,9 @@ class ContinuousAggregate:
         target grain exactly.
 
         Output: ``(bucket?, group…, state, duration_us, n)``."""
-        self._require_full_group_by(group_by, "state_durations")
+        self._require_full_group_by(group_by, _STATE_AGGS)
         d, keys_gb, bucket, grain_all = self._partial_frame(
-            "state_aggs", state_col, grain, group_by, realtime, start, end
+            _STATE_AGGS, state_col, grain, group_by, realtime, start, end
         )
         tcols = [] if grain_all else ["_tgt"]
         # SQL-string expression build (round 17, see _over)
@@ -2531,34 +2515,6 @@ class ContinuousAggregate:
         return out.withColumnRenamed("_tgt", bucket)
 
     # ----------------------- frequency (topn) + max_n/min_n partials
-    @staticmethod
-    def _mg_trim_exprs(ents_col: str, cap: int):
-        """Misra–Gries trim of an exact ``array<struct(c, v)>`` count
-        list to ``capacity`` entries: sort by (count desc, value asc),
-        subtract the (capacity+1)-th count from the survivors, drop the
-        non-positive remainder (the offline SpaceSaving construction;
-        error bound per value ≤ N/(capacity+1), and summed lower bounds
-        stay mergeable — Agarwal et al., "Mergeable Summaries",
-        PODS'12). When a bucket's distinct count ≤ capacity the cut is
-        0 and the stored counts are EXACT — the any-grain exactness
-        contract the q_cagg_topn gate checks. Returns (sorted_expr,
-        counts_map_expr over the sorted alias ``_f_se``)."""
-        sorted_expr = F.expr(
-            f"array_sort({ents_col}, (a, b) -> CASE "
-            f"WHEN a.c > b.c THEN -1 WHEN a.c < b.c THEN 1 "
-            f"WHEN a.v < b.v THEN -1 WHEN a.v > b.v THEN 1 ELSE 0 END)"
-        )
-        cut = (
-            f"IF(size(_f_se) > {cap}, "
-            f"element_at(_f_se, {cap + 1}).c, CAST(0 AS BIGINT))"
-        )
-        counts = F.expr(
-            f"map_from_entries(filter(transform(slice(_f_se, 1, {cap}),"
-            f" e -> named_struct('v', e.v, 'c', e.c - {cut})),"
-            f" e -> e.c > 0))"
-        )
-        return sorted_expr, counts
-
     def _freq_state(self, raw: DataFrame, col: str, spec: dict) -> DataFrame:
         """Mergeable FREQUENCY partial per (bucket, group):
         ``struct(n, counts: map<string,long>)`` — a Misra–Gries /
@@ -2572,10 +2528,6 @@ class ContinuousAggregate:
         exactly when every bucket's distinct count fits the capacity.
         Strict NULL semantics: NULL values are skipped; n counts
         non-null samples."""
-        if spec.get("rollup_of"):
-            return self._merge_freq_states(
-                raw, col, spec["rollup_of"], int(spec.get("capacity", 256))
-            )
         cap = int(spec.get("capacity", 256))
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
@@ -2615,82 +2567,13 @@ class ContinuousAggregate:
                 "named_struct('c', _c, 'v', _v) END)"
             ).alias("_f_ents"),
         )
-        sorted_expr, counts = self._mg_trim_exprs("_f_ents", cap)
+        sorted_expr, counts = _mg_trim_exprs("_f_ents", cap)
         flat = flat.select(balias, *gb, "_f_n", sorted_expr.alias("_f_se"))
         return flat.select(
             balias,
             *gb,
             F.when(
                 F.col("_f_n") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"), counts.alias("counts")
-                ),
-            ).alias(col),
-        )
-
-    def _merge_freq_states(
-        self, raw: DataFrame, col: str, src: str, cap: int
-    ) -> DataFrame:
-        """Child frequency state: per-value lower bounds ADD across the
-        parent's states (Misra–Gries union), then one re-trim to the
-        child capacity.
-
-        The collect feeding the re-trim is CAPACITY-bounded, not
-        grain-ratio-bounded: the trim only ever consults the
-        ``capacity + 1`` heaviest summed values (slice 1..cap minus the
-        (cap+1)-th count), so a rank window over the summed counts —
-        the same ``_rk <= cap+1`` trick :meth:`_freq_state` uses on the
-        raw side — drops everything below the cut BEFORE the
-        collect_list. Without it a coarse child (hour→year at capacity
-        256 ≈ 8,760 parents) would build a parents-per-child × capacity
-        struct list per group; with it the state build is ≤ cap+1
-        entries at any grain ratio. The window's total order (count
-        desc, value asc) matches :meth:`_mg_trim_exprs`'s sort, so the
-        pre-trim selects exactly the entries the full trim would."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        totals = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-        )
-        wrank = Window.partitionBy(balias, *gb).orderBy(
-            F.col("_c").desc(), F.col("_v").asc_nulls_last()
-        )
-        summed = (
-            d.select(
-                balias, *gb, F.explode(st["counts"]).alias("_v", "_c")
-            )
-            .groupBy(balias, *gb, "_v")
-            .agg(F.sum("_c").alias("_c"))
-            .withColumn("_rk", F.row_number().over(wrank))
-            .filter(F.col("_rk") <= cap + 1)
-            .groupBy(balias, *gb)
-            .agg(
-                F.collect_list(
-                    F.struct(F.col("_c").alias("c"), F.col("_v").alias("v"))
-                ).alias("_f_ents")
-            )
-        )
-        keys = [balias, *gb]
-        l, r = totals.alias("_fl"), summed.alias("_fr")
-        cond = None
-        for k in keys:
-            c = F.col(f"_fl.{k}").eqNullSafe(F.col(f"_fr.{k}"))
-            cond = c if cond is None else cond & c
-        j = l.join(r, cond, "left").select(
-            "_fl.*", F.col("_fr._f_ents").alias("_f_ents")
-        )
-        # a NULL _f_ents (every parent state NULL) flows through the
-        # trim as NULL and is masked by the guard below
-        sorted_expr, counts = self._mg_trim_exprs("_f_ents", cap)
-        j = j.select(*keys, "_f_n", "_f_nn", sorted_expr.alias("_f_se"))
-        return j.select(
-            balias,
-            *gb,
-            F.when(
-                (F.col("_f_nn") > 0) & F.col("_f_n").isNotNull(),
                 F.struct(
                     F.col("_f_n").alias("n"), counts.alias("counts")
                 ),
@@ -2722,7 +2605,7 @@ class ContinuousAggregate:
         from pyspark.sql import Window
 
         d, keys_gb, bucket, grain_all = self._partial_frame(
-            "freq_aggs", freq_col, grain, group_by, realtime, start, end
+            _FREQ_AGGS, freq_col, grain, group_by, realtime, start, end
         )
         tcols = [] if grain_all else ["_tgt"]
         merged = (
@@ -2765,8 +2648,6 @@ class ContinuousAggregate:
         entries ordered by (value, data) in the list's direction, so
         value ties resolve deterministically by payload and merges stay
         exact on the (value, data) total order."""
-        if spec.get("rollup_of"):
-            return self._merge_maxn_states(raw, col, spec)
         keep = int(spec.get("n", 5))
         desc = bool(spec.get("desc", True))
         by = spec.get("by")
@@ -2836,123 +2717,6 @@ class ContinuousAggregate:
             f"'vals', _f_vals) END AS {_q(col)}",
         )
 
-    def _merge_maxn_states(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Child candidate list: the child's top-n of the union equals
-        the top-n of the concatenated parent lists — selected with a
-        CAPACITY-bounded rank window over the exploded candidates (the
-        same ``_rk <= keep`` trick as :meth:`_merge_freq_states`), never
-        a parents-per-child × n flatten-collect, so the state build is
-        ≤ n values per group at any grain ratio. Equal values are
-        interchangeable, so the rank tie-order never changes the kept
-        multiset."""
-        from pyspark.sql import Window
-
-        keep = int(spec.get("n", 5))
-        desc = bool(spec.get("desc", True))
-        has_by = spec.get("by") is not None
-        d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-        st = F.col("_st")
-        totals = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-        )
-        if has_by:
-            ex = d.select(
-                balias,
-                *gb,
-                F.explode(
-                    F.arrays_zip(
-                        st["vals"].alias("v"), st["data"].alias("d")
-                    )
-                ).alias("_e"),
-            ).select(
-                balias,
-                *gb,
-                F.col("_e.v").alias("_v"),
-                F.col("_e.d").alias("_d"),
-            )
-            order = (
-                [F.col("_v").desc(), F.col("_d").desc_nulls_last()]
-                if desc
-                else [F.col("_v").asc(), F.col("_d").asc_nulls_last()]
-            )
-            w = Window.partitionBy(balias, *gb).orderBy(*order)
-            # rank-order the stored entries (see _maxn_state: struct
-            # sort breaks *_nulls_last payload order on asc ties)
-            cand = (
-                ex.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= keep)
-                .groupBy(balias, *gb)
-                .agg(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("_rk").alias("r"),
-                                F.col("_v").alias("v"),
-                                F.col("_d").alias("d"),
-                            )
-                        ),
-                        asc=True,
-                    ).alias("_f_ents")
-                )
-            )
-        else:
-            order = F.col("_v").desc() if desc else F.col("_v").asc()
-            w = Window.partitionBy(balias, *gb).orderBy(order)
-            cand = (
-                d.select(balias, *gb, F.explode(st["vals"]).alias("_v"))
-                .withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= keep)
-                .groupBy(balias, *gb)
-                .agg(
-                    F.sort_array(
-                        F.collect_list("_v"), asc=not desc
-                    ).alias("_f_vals")
-                )
-            )
-        keys = [balias, *gb]
-        l, r = totals.alias("_ml"), cand.alias("_mr")
-        cond = None
-        for k in keys:
-            c = F.col(f"_ml.{k}").eqNullSafe(F.col(f"_mr.{k}"))
-            cond = c if cond is None else cond & c
-        if has_by:
-            j = l.join(r, cond, "left").select(
-                "_ml.*", F.col("_mr._f_ents").alias("_f_ents")
-            )
-            return j.select(
-                balias,
-                *gb,
-                F.when(
-                    (F.col("_f_nn") > 0) & (F.col("_f_n") > 0),
-                    F.struct(
-                        F.col("_f_n").alias("n"),
-                        F.expr("transform(_f_ents, e -> e.v)").alias(
-                            "vals"
-                        ),
-                        F.expr("transform(_f_ents, e -> e.d)").alias(
-                            "data"
-                        ),
-                    ),
-                ).alias(col),
-            )
-        j = l.join(r, cond, "left").select(
-            "_ml.*", F.col("_mr._f_vals").alias("_f_vals")
-        )
-        return j.select(
-            balias,
-            *gb,
-            F.when(
-                (F.col("_f_nn") > 0) & (F.col("_f_n") > 0),
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_vals").alias("vals"),
-                ),
-            ).alias(col),
-        )
-
     def max_n_at_grain(
         self,
         maxn_col: Optional[str] = None,
@@ -2977,17 +2741,7 @@ class ContinuousAggregate:
         (value ties ordered by payload in the list's direction)."""
         from pyspark.sql import Window
 
-        specs = self.row.get("maxn_aggs") or {}
-        if maxn_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} max_n "
-                    f"columns; pass maxn_col"
-                )
-            maxn_col = next(iter(specs))
-        if maxn_col not in specs:
-            raise KeyError(f"no max_n column {maxn_col!r}")
-        spec = specs[maxn_col]
+        maxn_col, spec = self._family_col(_MAXN_AGGS, maxn_col)
         keep = int(spec.get("n", 5))
         desc = bool(spec.get("desc", True))
         has_by = spec.get("by") is not None
@@ -3073,54 +2827,12 @@ class ContinuousAggregate:
         ``grain`` must be a multiple of the cagg's bucket width.
 
         Output: ``(bucket, group…, duration_us)``."""
-        from .functions.time import parse_interval
-
-        sas = self.row.get("state_aggs") or {}
-        if not sas:
-            raise ValueError(
-                f"cagg {self.name!r} has no state_agg columns"
-            )
-        if state_col is None:
-            if len(sas) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several state_aggs "
-                    f"{sorted(sas)}; pass state_col"
-                )
-            state_col = next(iter(sas))
-        if state_col not in sas:
-            raise KeyError(f"no state_agg column {state_col!r}")
-        if grain is None:
-            raise ValueError(
-                "interpolated_duration_in_at_grain needs an explicit "
-                "grain"
-            )
-        if self.row["time_is_timestamp"]:
-            iv = parse_interval(grain)
-            if iv.months:
-                raise ValueError("needs a fixed-width grain")
-            width = iv.us
-        else:
-            width = int(grain)
-        pw = int(self.row["bucket_width_us"])
-        if (
-            self.row.get("bucket_width_months")
-            or width <= 0
-            or width % pw != 0
-        ):
-            raise ValueError(
-                "grain must be a positive integer multiple of the "
-                "cagg's fixed bucket width (parent buckets must nest)"
-            )
+        state_col, _ = self._family_col(_STATE_AGGS, state_col)
+        width, base = self._interp_base(
+            _STATE_AGGS, state_col, grain, realtime
+        )
         gb = list(self.row["group_by"])
         bucket = self.row["bucket_alias"]
-        df = self.read(realtime=realtime, only_cols=[state_col])
-        if self.row["time_is_timestamp"]:
-            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
-        else:
-            src_us = F.col(bucket).cast("long")
-        base = df.select(
-            *gb, src_us.alias("_src"), F.col(state_col).alias("_st")
-        ).filter(F.col("_st").isNotNull())
         # SQL-string expression build (round 17, see _over)
         gbq = [_q(g) for g in gb]
         wo = _over(gb, ["_src ASC"])
@@ -3189,8 +2901,6 @@ class ContinuousAggregate:
         contributed L but should contribute ``min(gap, L)`` — so
         :meth:`heartbeat_at_grain` serves exact liveness rollups at
         any grain, the ops analog of the counter family."""
-        if spec.get("rollup_of"):
-            return self._merge_heartbeat_states(raw, col, spec)
         liv = int(spec["liveness_us"])
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
@@ -3232,64 +2942,6 @@ class ContinuousAggregate:
             f"'live_us', _f_live, 'ranges', _f_ranges) END AS {_q(col)}",
         )
 
-    def _merge_heartbeat_states(
-        self, raw: DataFrame, col: str, spec: dict
-    ) -> DataFrame:
-        """Child heartbeat state: ordered merge of the parent's states
-        with one boundary correction per adjacent pair."""
-        from pyspark.sql import Window
-
-        liv = int(spec["liveness_us"])
-        d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        # last NON-NULL preceding state, not plain lag: _rollup_frame
-        # keeps NULL parent states by contract, and a NULL row between
-        # two real partials must not suppress their boundary correction
-        # (the _merge_counter_states discipline)
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        gap = st["first_us"] - prev_last
-        # the earlier partial's last beat contributed the full L; in
-        # the merged sequence it should contribute min(gap, L)
-        corr = F.when(
-            prev_last.isNotNull(), F.lit(liv) - F.least(gap, F.lit(liv))
-        )
-        joined = F.when(
-            prev_last.isNotNull() & (gap <= liv), F.lit(1)
-        ).otherwise(F.lit(0))
-        dd = d.select(
-            balias,
-            *gb,
-            st.alias("_st"),
-            F.coalesce(corr, F.lit(0)).alias("_corr"),
-            joined.alias("_join"),
-        )
-        flat = dd.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first"),
-            F.max(st["last_us"]).alias("_f_last"),
-            (F.sum(st["live_us"]) - F.sum("_corr")).alias("_f_live"),
-            (F.sum(st["ranges"]) - F.sum("_join")).alias("_f_ranges"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first").alias("first_us"),
-                    F.col("_f_last").alias("last_us"),
-                    F.col("_f_live").alias("live_us"),
-                    F.col("_f_ranges").alias("ranges"),
-                ),
-            ).alias(col),
-        )
-
     def heartbeat_at_grain(
         self,
         hb_col: Optional[str] = None,
@@ -3319,58 +2971,13 @@ class ContinuousAggregate:
         liveness tail is never clipped at the bucket edge (``live_us``
         can exceed the bucket span; the tail is not credited to the
         next bucket) and ``dead_us`` covers ``[first_us, last_us+L)``,
-        not a declared interval. Self-consistent and exact for "how
-        much liveness did this bucket's own heartbeats assert"; for
-        toolkit-style declared-interval numbers use
-        :meth:`heartbeat_interpolated_at_grain`, which clips each
-        bucket to its own span and credits cross-edge tails to the
-        next bucket."""
-        self._require_full_group_by(group_by, "heartbeat")
-        specs = self.row.get("heartbeat_aggs") or {}
-        if hb_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} heartbeat "
-                    f"columns; pass hb_col"
-                )
-            hb_col = next(iter(specs))
-        if hb_col not in specs:
-            raise KeyError(f"no heartbeat column {hb_col!r}")
-        liv = int(specs[hb_col]["liveness_us"])
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
-            hb_col, grain, group_by, realtime, start, end
+        not a declared interval. For toolkit-style declared-interval
+        numbers use :meth:`heartbeat_interpolated_at_grain`, which
+        clips each bucket to its own span and credits cross-edge tails
+        to the next bucket."""
+        return self._serve(
+            _HEARTBEAT_AGGS, hb_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        # SQL-string expression build (round 17, see _over)
-        gbq = [_q(g) for g in keys_gb]
-        wo = _over([*tcols, *keys_gb], ["_src ASC"])
-        prev_last = f"lag(_st.last_us) OVER ({wo})"
-        gap = f"(_st.first_us - {prev_last})"
-        dd = d.selectExpr(
-            *tcols,
-            *gbq,
-            "_st",
-            f"coalesce(CASE WHEN {prev_last} IS NOT NULL THEN "
-            f"{liv} - least({gap}, {liv}) END, 0) AS _corr",
-            f"CASE WHEN {prev_last} IS NOT NULL AND {gap} <= {liv} "
-            f"THEN 1 ELSE 0 END AS _join",
-        )
-        live = "(sum(_st.live_us) - sum(_corr))"
-        out = dd.groupBy(*tcols, *keys_gb).agg(
-            F.expr("sum(_st.n)").alias("n"),
-            F.expr(live).alias("live_us"),
-            F.expr(
-                f"max(_st.last_us) + {liv} - min(_st.first_us) - {live}"
-            ).alias("dead_us"),
-            F.expr("sum(_st.ranges) - sum(_join)").alias(
-                "num_live_ranges"
-            ),
-            F.expr("min(_st.first_us)").alias("first_us"),
-            F.expr("max(_st.last_us)").alias("last_us"),
-        )
-        if grain_all:
-            return out
-        return out.withColumnRenamed("_tgt", bucket)
 
     def heartbeat_interpolated_at_grain(
         self,
@@ -3402,20 +3009,10 @@ class ContinuousAggregate:
         emit no row, even when a previous tail reaches into them.
         Fixed-width grains only. One extra ``lag`` window over the
         per-bucket merged stats — O(buckets), not O(beats)."""
-        from .functions.time import parse_interval
         from pyspark.sql import Window
 
-        specs = self.row.get("heartbeat_aggs") or {}
-        if hb_col is None:
-            if len(specs) != 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has {len(specs)} heartbeat "
-                    f"columns; pass hb_col"
-                )
-            hb_col = next(iter(specs))
-        if hb_col not in specs:
-            raise KeyError(f"no heartbeat column {hb_col!r}")
-        liv = int(specs[hb_col]["liveness_us"])
+        hb_col, spec = self._family_col(_HEARTBEAT_AGGS, hb_col)
+        liv = int(spec["liveness_us"])
         if grain == "all":
             raise ValueError(
                 "interpolated heartbeat needs a fixed-width grain "
@@ -3485,20 +3082,11 @@ class ContinuousAggregate:
         re-bin), so :meth:`tdigest_quantiles_at_grain` serves
         percentiles at any coarser grain with free regrouping — the
         rank-error sibling of the DDSketch family."""
-        from .functions.tdigest import build_states, merge_states
+        from .functions.tdigest import build_states
 
         delta = int(spec.get("delta", 200))
         balias = self.row["bucket_alias"]
         gb = list(self.row["group_by"])
-        if spec.get("rollup_of"):
-            d, balias, gb = self._rollup_frame(raw, spec["rollup_of"])
-            return merge_states(
-                d.select(balias, *gb, F.col("_st").alias("_tdp")),
-                [balias, *gb],
-                "_tdp",
-                delta,
-                col,
-            )
         return build_states(
             raw.select(self._bucket_expr(raw), *gb,
                        F.expr(spec["value"]).alias("_tdv")),
@@ -3528,40 +3116,12 @@ class ContinuousAggregate:
         contract; rank-error ≲ π/(2·delta) otherwise.
 
         Output: ``(bucket?, group…, n, min_val, max_val, p50, …)``."""
-        from .functions.tdigest import merge_states, tdigest_quantiles
+        from .functions.tdigest import tdigest_quantiles
 
-        specs = self.row.get("tdigest_aggs") or {}
-        if not specs:
-            raise ValueError(
-                f"cagg {self.name!r} has no tdigest columns (pass "
-                f"tdigest_aggs= to create_cagg)"
-            )
-        if td_col is None:
-            if len(specs) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several tdigests "
-                    f"{sorted(specs)}; pass td_col"
-                )
-            td_col = next(iter(specs))
-        if td_col not in specs:
-            raise KeyError(f"no tdigest column {td_col!r}")
-        delta = int(specs[td_col].get("delta", 200))
-        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
+        merged, keys, bucket = self._merged_tdigest(
             td_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
-        merged = merge_states(
-            d.select(*tcols, *keys_gb, "_st"),
-            [*tcols, *keys_gb],
-            "_st",
-            delta,
-            "_td",
-        )
-        out = tdigest_quantiles(
-            merged, list(qs), by=[*tcols, *keys_gb], state_col="_td"
-        )
-        if grain_all:
-            return out
+        out = tdigest_quantiles(merged, list(qs), by=keys, state_col="_td")
         return out.withColumnRenamed("_tgt", bucket)
 
     def tdigest_summary_at_grain(
@@ -3599,41 +3159,32 @@ class ContinuousAggregate:
         :meth:`tdigest_quantiles_at_grain`. Exact while the merged
         digest stays lossless (the oracle-gate contract); standard
         centroid-midpoint CDF interpolation otherwise."""
-        from .functions.tdigest import merge_states, tdigest_rank
+        from .functions.tdigest import tdigest_rank
 
-        specs = self.row.get("tdigest_aggs") or {}
-        if not specs:
-            raise ValueError(
-                f"cagg {self.name!r} has no tdigest columns (pass "
-                f"tdigest_aggs= to create_cagg)"
-            )
-        if td_col is None:
-            if len(specs) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several tdigests "
-                    f"{sorted(specs)}; pass td_col"
-                )
-            td_col = next(iter(specs))
-        if td_col not in specs:
-            raise KeyError(f"no tdigest column {td_col!r}")
-        delta = int(specs[td_col].get("delta", 200))
+        merged, keys, bucket = self._merged_tdigest(
+            td_col, grain, group_by, realtime, start, end
+        )
+        res = tdigest_rank(merged, value, by=keys, state_col="_td", out=out)
+        return res.withColumnRenamed("_tgt", bucket)
+
+    def _merged_tdigest(self, td_col, grain, group_by, realtime, start, end):
+        """Stored t-digest states merged per target key (``_td``):
+        ``(frame, keys, bucket_alias)``."""
+        from .functions.tdigest import merge_states
+
+        td_col, spec = self._family_col(_TDIGEST_AGGS, td_col)
         d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
             td_col, grain, group_by, realtime, start, end
         )
-        tcols = [] if grain_all else ["_tgt"]
+        keys = keys_gb if grain_all else ["_tgt", *keys_gb]
         merged = merge_states(
-            d.select(*tcols, *keys_gb, "_st"),
-            [*tcols, *keys_gb],
+            d.select(*keys, "_st"),
+            keys,
             "_st",
-            delta,
+            int(spec.get("delta", 200)),
             "_td",
         )
-        res = tdigest_rank(
-            merged, value, by=[*tcols, *keys_gb], state_col="_td", out=out
-        )
-        if grain_all:
-            return res
-        return res.withColumnRenamed("_tgt", bucket)
+        return merged, keys, bucket
 
     # --------------------------- hierarchical state merges (rollup_of)
     def _rollup_frame(self, raw: DataFrame, src: str):
@@ -3644,479 +3195,116 @@ class ContinuousAggregate:
         and masked downstream so an all-NULL child group still gets a
         row with a NULL state (strict semantics, like the raw
         builders)."""
-        balias = self.row["bucket_alias"]
-        gb = list(self.row["group_by"])
-        return (
-            raw.select(
-                self._bucket_expr(raw),
-                *gb,
-                self._raw_time_us(raw).alias("_src"),
-                F.col(src).alias("_st"),
-            ),
-            balias,
-            gb,
+        return raw.select(
+            self._bucket_expr(raw),
+            *self.row["group_by"],
+            self._raw_time_us(raw).alias("_src"),
+            F.col(src).alias("_st"),
         )
 
-    def _merge_counter_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child counter state = ordered merge of the parent's states:
-        each adjacent non-null pair contributes ONE reset-adjusted
-        boundary step (the :meth:`counter_at_grain` math, emitted as a
-        STATE struct so the child can itself be rolled up / served at
-        any grain)."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        bstep = st["first_val"] - prev_last
-        binc = (
-            F.when(st.isNull(), F.lit(None).cast("double"))
-            .when(prev_last.isNull(), F.lit(0.0))
-            .when(bstep < 0, st["first_val"])
-            .otherwise(bstep)
-        )
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            binc.alias("_binc"),
-            F.when(st.isNotNull(), (bstep < 0).cast("int")).alias(
-                "_breset"
-            ),
-            F.when(
-                st.isNotNull() & prev_last.isNotNull(),
-                (st["first_val"] != prev_last).cast("int"),
-            ).alias("_bchange"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            (
-                F.sum(st["delta"])
-                + F.coalesce(F.sum("_binc"), F.lit(0.0))
-            ).alias("_f_delta"),
-            (
-                F.sum(st["num_resets"])
-                + F.coalesce(F.sum("_breset"), F.lit(0))
-            ).alias("_f_resets"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if _struct_has_field(d, "_st", "num_changes")
-                else F.lit(None).cast("long")
-            ).alias("_f_changes"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_delta").alias("delta"),
-                    F.col("_f_resets").alias("num_resets"),
-                    F.col("_f_changes").alias("num_changes"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_gauge_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child gauge state: bookends merge by earliest/latest parent;
-        the merged last step falls back to the boundary step into the
-        last parent when that parent holds a single sample — exactly
-        :meth:`gauge_at_grain`'s candidates, stored as a state."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_val = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        cand_step = F.coalesce(
-            st["last_step"], st["first_val"] - prev_last_val
-        )
-        cand_prev = F.coalesce(st["last_prev_us"], prev_last_us)
-        has_changes = _struct_has_field(d, "_st", "num_changes")
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            cand_step.alias("_cs"),
-            cand_prev.alias("_cp"),
-            F.when(
-                st.isNotNull() & prev_last_val.isNotNull(),
-                (st["first_val"] != prev_last_val).cast("int"),
-            ).alias("_bchange"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            F.max_by(F.col("_cs"), F.col("_k")).alias("_f_last_step"),
-            F.max_by(F.col("_cp"), F.col("_k")).alias("_f_last_prev"),
-            (
-                (
-                    F.sum(st["num_changes"])
-                    + F.coalesce(F.sum("_bchange"), F.lit(0))
-                )
-                if has_changes
-                else F.lit(None).cast("long")
-            ).alias("_f_changes"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_last_step").alias("last_step"),
-                    F.col("_f_last_prev").alias("last_prev_us"),
-                    F.col("_f_changes").alias("num_changes"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_stats_states(
-        self, raw: DataFrame, col: str, src: str, two_d: bool = False
-    ) -> DataFrame:
-        """Child stats state: fieldwise add/min/max — moments merge
-        commutatively (the classical parallel decomposition). 2-D
-        comoments merge by the same fieldwise sums."""
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        if two_d:
-            flat = d.groupBy(balias, *gb).agg(
-                F.count("_st").alias("_f_nn"),
-                F.sum(st["n"]).alias("_f_n"),
-                F.sum(st["sx"]).alias("_f_sx"),
-                F.sum(st["sy"]).alias("_f_sy"),
-                F.sum(st["sxx"]).alias("_f_sxx"),
-                F.sum(st["syy"]).alias("_f_syy"),
-                F.sum(st["sxy"]).alias("_f_sxy"),
-            )
-            return flat.select(
-                balias,
-                *gb,
-                F.when(
-                    F.col("_f_nn") > 0,
-                    F.struct(
-                        F.col("_f_n").alias("n"),
-                        F.col("_f_sx").alias("sx"),
-                        F.col("_f_sy").alias("sy"),
-                        F.col("_f_sxx").alias("sxx"),
-                        F.col("_f_syy").alias("syy"),
-                        F.col("_f_sxy").alias("sxy"),
-                    ),
-                ).alias(col),
-            )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.sum(st["s"]).alias("_f_s"),
-            F.sum(st["s2"]).alias("_f_s2"),
-            F.min(st["mn"]).alias("_f_mn"),
-            F.max(st["mx"]).alias("_f_mx"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_s").alias("s"),
-                    F.col("_f_s2").alias("s2"),
-                    F.col("_f_mn").alias("mn"),
-                    F.col("_f_mx").alias("mx"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_timeweight_states(
-        self, raw: DataFrame, col: str, src: str, method: str
-    ) -> DataFrame:
-        """Child time-weight state: Σ parent integrals + one
-        interpolated boundary segment per adjacent non-null pair (the
-        :meth:`time_weighted_at_grain` merge, stored as a state)."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_val = F.last(
-            F.when(st.isNotNull(), st["last_val"]), ignorenulls=True
-        ).over(wp)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        bdt = (st["first_us"] - prev_last_us).cast("double")
-        if method == "linear":
-            bseg = (prev_last_val + st["first_val"]) / F.lit(2.0) * bdt
+    def _interp_base(self, fam: PartialFamily, col: str, grain, realtime):
+        """``(width, frame(group…, _src, _st))`` for the interpolated
+        accessors: ``_src`` is the parent bucket in internal µs, NULL
+        states are skipped, and ``grain`` must be a fixed multiple of
+        the cagg's bucket width (parent buckets nest, so every target
+        edge is a parent edge)."""
+        if grain is None:
+            raise ValueError(f"{fam.interp_serve} needs an explicit grain")
+        if self.row["time_is_timestamp"]:
+            iv = parse_interval(grain)
+            if iv.months:
+                raise ValueError("needs a fixed-width grain")
+            width = iv.us
         else:
-            bseg = prev_last_val * bdt
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            F.when(st.isNotNull(), F.coalesce(bseg, F.lit(0.0))).alias(
-                "_bseg"
-            ),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_val"], F.col("_k")).alias("_f_first_val"),
-            F.max_by(st["last_val"], F.col("_k")).alias("_f_last_val"),
-            (
-                F.sum(st["integral"])
-                + F.coalesce(F.sum("_bseg"), F.lit(0.0))
-            ).alias("_f_integral"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_val").alias("first_val"),
-                    F.col("_f_last_val").alias("last_val"),
-                    F.col("_f_integral").alias("integral"),
-                ),
-            ).alias(col),
-        )
+            width = int(grain)
+        pw = int(self.row["bucket_width_us"])
+        if (
+            self.row.get("bucket_width_months")
+            or width <= 0
+            or width % pw != 0
+        ):
+            raise ValueError(
+                "grain must be a positive integer multiple of the "
+                "cagg's fixed bucket width (parent buckets must nest)"
+            )
+        bucket = self.row["bucket_alias"]
+        df = self.read(realtime=realtime, only_cols=[col])
+        if self.row["time_is_timestamp"]:
+            src_us = F.unix_micros(F.col(bucket).cast("timestamp"))
+        else:
+            src_us = F.col(bucket).cast("long")
+        base = df.select(
+            *self.row["group_by"], src_us.alias("_src"), F.col(col).alias("_st")
+        ).filter(F.col("_st").isNotNull())
+        return width, base
 
-    def _merge_candlestick_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child OHLC state: open/close by earliest/latest parent
-        sample time (unique within a child bucket — parents partition
-        time), the rest fieldwise."""
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        flat = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["open"], st["first_us"]).alias("_f_open"),
-            F.max(st["high"]).alias("_f_high"),
-            F.min(st["low"]).alias("_f_low"),
-            F.max_by(st["close"], st["last_us"]).alias("_f_close"),
-            F.sum(st["volume"]).alias("_f_volume"),
-            F.sum(st["pv"]).alias("_f_pv"),
-        )
-        return flat.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_open").alias("open"),
-                    F.col("_f_high").alias("high"),
-                    F.col("_f_low").alias("low"),
-                    F.col("_f_close").alias("close"),
-                    F.col("_f_volume").alias("volume"),
-                    F.col("_f_pv").alias("pv"),
-                ),
-            ).alias(col),
-        )
-
-    def _merge_stateagg_states(
-        self, raw: DataFrame, col: str, src: str
-    ) -> DataFrame:
-        """Child state-agg state: duration maps add per state, each
-        boundary gap lands on the earlier parent's last state, bookends
-        merge by earliest/latest parent — the
-        :meth:`state_durations_at_grain` math emitted as a state."""
-        from pyspark.sql import Window
-
-        d, balias, gb = self._rollup_frame(raw, src)
-        st = F.col("_st")
-        w = Window.partitionBy(balias, *gb).orderBy(F.col("_src").asc())
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        prev_last_us = F.last(
-            F.when(st.isNotNull(), st["last_us"]), ignorenulls=True
-        ).over(wp)
-        prev_last_state = F.last(
-            F.when(st.isNotNull(), st["last_state"]), ignorenulls=True
-        ).over(wp)
-        gap = st["first_us"] - prev_last_us
-        d = d.select(
-            balias,
-            *gb,
-            "_st",
-            F.when(st.isNotNull(), prev_last_state).alias("_bstate"),
-            F.when(st.isNotNull() & (gap > 0), gap).alias("_bgap"),
-            F.when(st.isNotNull(), F.col("_src")).alias("_k"),
-        )
-        per_state = d.select(
-            balias,
-            *gb,
-            F.explode_outer(st["durations"]).alias("_s", "_dn"),
-        ).select(
-            balias,
-            *gb,
-            "_s",
-            F.col("_dn")["d"].alias("_d"),
-            F.col("_dn")["n"].alias("_n"),
-        )
-        bnd = d.filter(
-            F.col("_bstate").isNotNull() & F.col("_bgap").isNotNull()
-        ).select(
-            balias,
-            *gb,
-            F.col("_bstate").alias("_s"),
-            F.col("_bgap").alias("_d"),
-            F.lit(0).cast("long").alias("_n"),
-        )
-        merged = (
-            per_state.unionByName(bnd)
-            .groupBy(balias, *gb, "_s")
-            .agg(F.sum("_d").alias("_d"), F.sum("_n").alias("_n"))
-        )
-        ent = F.when(
-            F.col("_s").isNotNull(),
-            F.struct(
-                F.col("_s"),
-                F.struct(
-                    F.col("_d").alias("d"), F.col("_n").alias("n")
-                ).alias("dn"),
-            ),
-        )
-        maps = merged.groupBy(balias, *gb).agg(
-            F.collect_list(ent).alias("_f_ents"),
-        )
-        books = d.groupBy(balias, *gb).agg(
-            F.count("_st").alias("_f_nn"),
-            F.sum(st["n"]).alias("_f_n"),
-            F.min(st["first_us"]).alias("_f_first_us"),
-            F.max(st["last_us"]).alias("_f_last_us"),
-            F.min_by(st["first_state"], F.col("_k")).alias(
-                "_f_first_state"
-            ),
-            F.max_by(st["last_state"], F.col("_k")).alias(
-                "_f_last_state"
-            ),
-        )
-        l, r = books.alias("_ml"), maps.alias("_mr")
-        cond = None
-        for k in [balias, *gb]:
-            c = F.col(f"_ml.{k}").eqNullSafe(F.col(f"_mr.{k}"))
-            cond = c if cond is None else cond & c
-        joined = l.join(r, cond).select("_ml.*", F.col("_mr._f_ents"))
-        return joined.select(
-            balias,
-            *gb,
-            F.when(
-                F.col("_f_nn") > 0,
-                F.struct(
-                    F.col("_f_n").alias("n"),
-                    F.col("_f_first_us").alias("first_us"),
-                    F.col("_f_last_us").alias("last_us"),
-                    F.col("_f_first_state").alias("first_state"),
-                    F.col("_f_last_state").alias("last_state"),
-                    F.map_from_entries(
-                        F.array_sort(F.col("_f_ents"))
-                    ).alias("durations"),
-                ),
-            ).alias(col),
-        )
-
-    def _require_full_group_by(self, group_by, kind: str) -> None:
-        """Counter/gauge partials are only mergeable WITHIN one series:
-        regrouping on a subset of the cagg's group columns would merge
-        partials from different series into one ordered-by-``_src``
-        window, making the boundary-step/lag math nondeterministic
-        (several partials share each parent bucket) and semantically
-        wrong. Sketch/stats/HLL partials are commutative states, so
-        their accessors keep free regrouping."""
+    def _require_full_group_by(self, group_by, fam: PartialFamily) -> None:
+        """Ordered partials (counter, gauge, time-weight, state-agg,
+        heartbeat) are only mergeable WITHIN one series: regrouping on
+        a subset of the cagg's group columns would merge partials from
+        different series into one ordered-by-``_src`` window, making
+        the boundary math nondeterministic (several partials share each
+        parent bucket) and semantically wrong. Commutative states
+        (sketch/stats/candlestick/HLL/…) keep free regrouping."""
         if group_by is None:
             return
         missing = [c for c in self.row["group_by"] if c not in set(group_by)]
         if missing:
             raise ValueError(
-                f"{kind}_at_grain(group_by=...) must include every "
-                f"group column of cagg {self.name!r} (missing "
-                f"{missing}): {kind} partials are only mergeable "
-                f"within a single series"
+                f"{fam.serve}(group_by=...) must include every group "
+                f"column of cagg {self.name!r} (missing {missing}): "
+                f"{fam.label} partials are only mergeable within a "
+                f"single series"
             )
 
-    def _partial_frame(
-        self,
-        kind: str,
-        col: Optional[str],
-        grain,
-        group_by,
-        realtime,
-        start,
-        end,
-    ):
-        """Shared serving scaffold for the partial-state accessors:
-        resolve the partial column, apply bucket-aligned bounds,
-        compute the target bucket, and return
-        ``(frame(_tgt, group…, _src, _st), group_cols, bucket_alias,
-        grain_is_all)``."""
-        d = self.row.get(kind) or {}
-        if not d:
+    def _family_col(self, fam: PartialFamily, col: Optional[str]):
+        """``(col, spec)`` of a ``fam`` partial column; ``col=None``
+        picks the cagg's only one."""
+        specs = self.row.get(fam.key) or {}
+        if not specs:
             raise ValueError(
-                f"cagg {self.name!r} has no {kind} columns (pass "
-                f"{kind}= to create_cagg)"
+                f"cagg {self.name!r} has no {fam.label} columns (pass "
+                f"{fam.key}= to create_cagg)"
             )
         if col is None:
-            if len(d) > 1:
+            if len(specs) > 1:
                 raise ValueError(
-                    f"cagg {self.name!r} has several {kind} "
-                    f"{sorted(d)}; pass the column name"
+                    f"cagg {self.name!r} has several {fam.label} columns "
+                    f"{sorted(specs)}; pass the column name"
                 )
-            col = next(iter(d))
-        if col not in d:
-            raise KeyError(f"no {kind} column {col!r}")
+            col = next(iter(specs))
+        if col not in specs:
+            raise KeyError(f"no {fam.label} column {col!r}")
+        return col, specs[col]
+
+    def _partial_frame(
+        self, fam: PartialFamily, col, grain, group_by, realtime, start, end
+    ):
+        """:meth:`_partial_frame_for_col` for a ``fam`` column
+        (``col=None`` picks the cagg's only one)."""
+        col, _ = self._family_col(fam, col)
         return self._partial_frame_for_col(
             col, grain, group_by, realtime, start, end
         )
+
+    def _serve(
+        self, fam: PartialFamily, col, grain, group_by, realtime, start, end
+    ) -> DataFrame:
+        """At-grain read of a fieldwise/ordered family: the family merge
+        over the target keys, projected through its finalize."""
+        col, spec = self._family_col(fam, col)
+        shape = fam.shape(spec)
+        if fam.ordered:
+            self._require_full_group_by(group_by, shape)
+        d, keys_gb, bucket, grain_all = self._partial_frame_for_col(
+            col, grain, group_by, realtime, start, end
+        )
+        keys = keys_gb if grain_all else ["_tgt", *keys_gb]
+        out = shape.merge_fields(d, keys, spec).selectExpr(
+            *[_q(k) for k in keys],
+            *[e.format(**spec) for e in shape.finalize],
+        )
+        return out if grain_all else out.withColumnRenamed("_tgt", bucket)
 
     def distinct_at_grain(
         self,
@@ -4715,22 +3903,8 @@ class ContinuousAggregate:
         own bucket_alias defaults to "bucket" too."""
         from .functions.time import time_bucket
 
-        sketches = self.row.get("sketches") or {}
-        if not sketches:
-            raise ValueError(
-                f"cagg {self.name!r} has no sketch columns (pass "
-                f"sketches= to create_cagg)"
-            )
-        if sketch_col is None:
-            if len(sketches) > 1:
-                raise ValueError(
-                    f"cagg {self.name!r} has several sketches "
-                    f"{sorted(sketches)}; pass sketch_col"
-                )
-            sketch_col = next(iter(sketches))
-        if sketch_col not in sketches:
-            raise KeyError(f"no sketch column {sketch_col!r}")
-        alpha = float(sketches[sketch_col].get("alpha", 0.01))
+        sketch_col, spec = self._family_col(_SKETCHES, sketch_col)
+        alpha = float(spec.get("alpha", 0.01))
         bucket = self.row["bucket_alias"]
         gb = list(self.row["group_by"] if group_by is None else group_by)
 
@@ -4868,13 +4042,7 @@ class ContinuousAggregate:
             join=self.row.get("join"),
             window_fns=self.row.get("window_fns"),
             enable_window_functions=bool(self.row.get("window_fns")),
-            sketches=self.row.get("sketches"),
-            counters=self.row.get("counters"),
-            gauges=self.row.get("gauges"),
-            stats_aggs=self.row.get("stats_aggs"),
-            time_weights=self.row.get("time_weights"),
-            candlesticks=self.row.get("candlesticks"),
-            state_aggs=self.row.get("state_aggs"),
+            **{f.key: self.row.get(f.key) for f in FAMILIES.values()},
         )
         if refresh:
             new.refresh()

@@ -27,6 +27,7 @@ the reference (src/chunk.c ts_chunk_create_table).
 
 from __future__ import annotations
 
+import math
 import re
 from datetime import datetime, timezone as _tz
 
@@ -1664,12 +1665,128 @@ def match_create_cagg(q: str):
     return m
 
 
+def _partial_spec(fn: str, args: list, rw) -> tuple:
+    """``(spec, time argument | None)`` of one toolkit partial aggregate
+    in a cagg definition (``caggs.FAMILY_OF_SQL_FN`` names the family
+    its spec goes to). ``rw`` rewrites an argument into a Spark SQL
+    expression. Aggregates that order samples return their time
+    argument so the caller can check it is the bucketed column.
+    NOTE: SQL partials order by time only; equal-timestamp rows need
+    the Python API's tiebreak= option."""
+
+    def targ(a: str) -> str:
+        return a.strip().split(".")[-1].strip()
+
+    if fn == "time_weight":
+        # time_weight('LOCF' | 'Linear', ts, value)
+        if len(args) != 3:
+            raise ValueError("time_weight(method, ts, value)")
+        mk, mv = _literal_of(args[0])
+        if mk != "string" or str(mv).lower() not in ("locf", "linear"):
+            raise ValueError(
+                "time_weight method must be the literal 'LOCF' or 'Linear'"
+            )
+        return {"value": rw(args[2]), "method": str(mv).lower()}, targ(args[1])
+    if fn == "candlestick_agg":
+        if len(args) not in (2, 3):
+            raise ValueError("candlestick_agg(ts, price[, volume])")
+        spec = {"price": rw(args[1])}
+        if len(args) == 3:
+            spec["volume"] = rw(args[2])
+        return spec, targ(args[0])
+    if fn == "stats_agg":
+        # 1-D stats_agg(value) or 2-D stats_agg(y, x) — the toolkit/PG
+        # argument order puts the DEPENDENT variable first
+        if len(args) == 1:
+            return {"value": rw(args[0])}, None
+        if len(args) == 2:
+            return {"value": rw(args[1]), "y": rw(args[0])}, None
+        raise ValueError("stats_agg takes 1 (value) or 2 (y, x) arguments")
+    if fn == "state_agg":
+        if len(args) != 2:
+            raise ValueError("state_agg(ts, state)")
+        return {"state": rw(args[1])}, targ(args[0])
+    if fn == "heartbeat_agg":
+        # heartbeat_agg(ts, 'liveness interval') — the toolkit form also
+        # takes (start, agg_interval), which the cagg bucket supplies
+        if len(args) != 2:
+            raise ValueError("heartbeat_agg(ts, liveness)")
+        lk, lv = _literal_of(args[1])
+        if lk not in ("interval", "string"):
+            raise ValueError(
+                "heartbeat_agg liveness must be an interval literal"
+            )
+        return {"liveness": str(lv)}, targ(args[0])
+    if fn in ("freq_agg", "topn_agg"):
+        # toolkit freq_agg(min_freq, value): any value with frequency >
+        # min_freq·N must surface — the Misra–Gries guarantee with
+        # capacity ≥ 1/min_freq. topn_agg(n, value) sizes generously so
+        # top-n stays reliable.
+        if fn == "freq_agg" and len(args) == 1:
+            return {"value": rw(args[0])}, None
+        if len(args) != 2:
+            raise ValueError(f"{fn}([min_freq | n,] value)")
+        try:
+            fv = float(args[0].strip())
+        except ValueError:
+            raise ValueError(
+                f"{fn} first argument must be a numeric literal"
+            ) from None
+        if fn == "freq_agg":
+            if not (0.0 < fv <= 1.0):
+                raise ValueError("freq_agg min_freq must be in (0, 1]")
+            return {"value": rw(args[1]), "capacity": math.ceil(1.0 / fv)}, None
+        if fv < 1:
+            raise ValueError("topn_agg n must be >= 1")
+        # the toolkit's topn(agg) without an explicit n serves the
+        # agg's own n — record it
+        spec = {"value": rw(args[1]), "capacity": max(256, int(fv))}
+        return {**spec, "n": int(fv)}, None
+    if fn == "tdigest":
+        # toolkit tdigest(size, value): size is the compression (max
+        # centroids)
+        if len(args) != 2:
+            raise ValueError("tdigest(size, value)")
+        nk, nv = _literal_of(args[0])
+        if nk != "int" or int(nv) < 2:
+            raise ValueError("tdigest size must be an integer literal >= 2")
+        return {"value": rw(args[1]), "delta": int(nv)}, None
+    if fn in ("max_n", "min_n", "max_n_by", "min_n_by"):
+        # toolkit max_n(value, n) / max_n_by(value, data, n): the top-n
+        # values, with an accompanying payload per entry for *_by
+        by = fn.endswith("_by")
+        if len(args) != (3 if by else 2):
+            raise ValueError(f"{fn}(value, data, n)" if by else f"{fn}(value, n)")
+        nk, nv = _literal_of(args[-1])
+        if nk != "int":
+            raise ValueError(f"{fn} n must be an integer literal")
+        spec = {"value": rw(args[0]), "n": int(nv), "desc": fn.startswith("max")}
+        if by:
+            spec["by"] = rw(args[1])
+        return spec, None
+    if fn == "percentile_agg":
+        if len(args) != 1:
+            raise ValueError("percentile_agg(value)")
+        return {"value": rw(args[0])}, None
+    if fn == "uddsketch":
+        # uddsketch(size, max_error, value): log-bucket maps are
+        # inherently bounded here, so only max_error carries over
+        if len(args) != 3:
+            raise ValueError("uddsketch(size, max_error, value)")
+        return {"value": rw(args[2]), "alpha": float(args[1])}, None
+    # counter_agg / gauge_agg(ts, value)
+    if len(args) != 2:
+        raise ValueError(f"{fn}(ts, value)")
+    return {"value": rw(args[1])}, targ(args[0])
+
+
 def run_create_cagg(ts, m) -> DataFrame:
     """Parse the defining query into ``TSSession.create_cagg`` arguments
     (the same validation path as tsl/src/continuous_aggs/common.c
     ``cagg_validate_query``): one time_bucket in the target list, plain
     group columns, aggregate expressions, optional WHERE and a single
     optional ``JOIN dim ON a = b``."""
+    from .caggs import FAMILIES, FAMILY_OF_SQL_FN, family_of
     from .sqlapi import rewrite_sql as _rw
     from .sqlgapfill import _alias_of, _clauses_of, _head_call, _split_select_items
 
@@ -1687,254 +1804,32 @@ def run_create_cagg(ts, m) -> DataFrame:
     bucket_alias = "bucket"
     group_by: list[str] = []
     aggs: dict[str, str] = {}
-    sketches: dict[str, dict] = {}
-    counters: dict[str, dict] = {}
-    gauges: dict[str, dict] = {}
-    stats_aggs: dict[str, dict] = {}
-    time_weights: dict[str, dict] = {}
-    candlesticks: dict[str, dict] = {}
-    state_aggs: dict[str, dict] = {}
-    freq_aggs: dict[str, dict] = {}
-    maxn_aggs: dict[str, dict] = {}
-    heartbeat_aggs: dict[str, dict] = {}
-    tdigest_aggs: dict[str, dict] = {}
+    partials: dict[str, dict] = {key: {} for key in FAMILIES}
     rollups: dict[str, str] = {}  # alias -> parent partial column
     partial_time_args: list[tuple[str, str, str]] = []
     for item in items:
         expr, alias = _alias_of(item)
-        twh = _head_call(expr, {"time_weight", "candlestick_agg"})
-        if twh:
-            # toolkit time-weight / candlestick partials in the cagg
-            # definition (caggs.py time_weights=/candlesticks=; the
-            # average(rollup(time_weight(...))) and
-            # rollup(candlestick_agg(...)) idioms)
-            if alias is None:
-                raise ValueError(f"cagg partial needs AS alias: {item!r}")
-            fn, args = twh
-            if fn == "time_weight":
-                # time_weight('LOCF' | 'Linear', ts, value)
-                if len(args) != 3:
-                    raise ValueError("time_weight(method, ts, value)")
-                mk, mv = _literal_of(args[0])
-                if mk != "string" or str(mv).lower() not in (
-                    "locf",
-                    "linear",
-                ):
-                    raise ValueError(
-                        "time_weight method must be the literal 'LOCF' "
-                        "or 'Linear'"
-                    )
-                time_weights[alias] = {
-                    "value": _rw(args[2].strip(), ts),
-                    "method": str(mv).lower(),
-                }
-                partial_time_args.append(
-                    (fn, alias, args[1].strip().split(".")[-1].strip())
-                )
-            else:  # candlestick_agg(ts, price[, volume])
-                if len(args) not in (2, 3):
-                    raise ValueError("candlestick_agg(ts, price[, volume])")
-                spec = {"price": _rw(args[1].strip(), ts)}
-                if len(args) == 3:
-                    spec["volume"] = _rw(args[2].strip(), ts)
-                candlesticks[alias] = spec
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-            continue
-        cnh = _head_call(
-            expr,
-            {
-                "counter_agg",
-                "gauge_agg",
-                "stats_agg",
-                "state_agg",
-                "heartbeat_agg",
-                "freq_agg",
-                "topn_agg",
-                "max_n",
-                "min_n",
-                "max_n_by",
-                "min_n_by",
-                "tdigest",
-            },
-        )
-        if cnh:
+        ph = _head_call(expr, set(FAMILY_OF_SQL_FN) | {"rollup"})
+        if ph:
             # toolkit partial aggregates inside the cagg definition —
-            # store a mergeable PARTIAL (caggs.py counters=/gauges=/
-            # stats_aggs=; the rollup(counter_agg/gauge_agg/stats_agg)
-            # idiom). counter_agg/gauge_agg(ts, value): the time
-            # argument must be the bucketed time column; stats_agg is
-            # the 1-D form stats_agg(value).
+            # the mat table stores a mergeable STATE (caggs.FAMILIES);
+            # rollup(col) defines a hierarchical child over the parent
+            # cagg's partial column, its family resolved once the FROM
+            # clause is known
             if alias is None:
                 raise ValueError(f"cagg partial needs AS alias: {item!r}")
-            fn, args = cnh
-            if fn == "stats_agg":
-                # 1-D stats_agg(value) or 2-D stats_agg(y, x) — the
-                # toolkit/PG argument order puts the DEPENDENT variable
-                # first (regr_slope(y, x))
-                if len(args) == 1:
-                    stats_aggs[alias] = {"value": _rw(args[0].strip(), ts)}
-                elif len(args) == 2:
-                    stats_aggs[alias] = {
-                        "value": _rw(args[1].strip(), ts),
-                        "y": _rw(args[0].strip(), ts),
-                    }
-                else:
-                    raise ValueError(
-                        "stats_agg takes 1 (value) or 2 (y, x) arguments"
-                    )
-                continue
-            if fn == "state_agg":
-                if len(args) != 2:
-                    raise ValueError("state_agg(ts, state)")
-                state_aggs[alias] = {"state": _rw(args[1].strip(), ts)}
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-                continue
-            if fn == "heartbeat_agg":
-                # heartbeat_agg(ts, 'liveness interval') — the toolkit
-                # form also takes (start, agg_interval) which the cagg
-                # bucket supplies here
-                if len(args) != 2:
-                    raise ValueError("heartbeat_agg(ts, liveness)")
-                lk, lv = _literal_of(args[1])
-                if lk not in ("interval", "string"):
-                    raise ValueError(
-                        "heartbeat_agg liveness must be an interval "
-                        "literal"
-                    )
-                heartbeat_aggs[alias] = {"liveness": str(lv)}
-                partial_time_args.append(
-                    (fn, alias, args[0].strip().split(".")[-1].strip())
-                )
-                continue
-            if fn in ("freq_agg", "topn_agg"):
-                # toolkit freq_agg(min_freq, value): any value with
-                # frequency > min_freq·N must surface — the Misra–Gries
-                # guarantee with capacity ≥ 1/min_freq. topn_agg(n,
-                # value) sizes generously so top-n stays reliable.
-                if fn == "freq_agg" and len(args) == 1:
-                    freq_aggs[alias] = {"value": _rw(args[0].strip(), ts)}
-                elif len(args) == 2:
-                    try:
-                        fv = float(args[0].strip())
-                    except ValueError:
-                        raise ValueError(
-                            f"{fn} first argument must be a numeric "
-                            f"literal"
-                        ) from None
-                    if fn == "freq_agg" and not (0.0 < fv <= 1.0):
-                        raise ValueError(
-                            "freq_agg min_freq must be in (0, 1]"
-                        )
-                    if fn == "topn_agg" and fv < 1:
-                        raise ValueError("topn_agg n must be >= 1")
-                    import math as _math
-
-                    cap = (
-                        int(_math.ceil(1.0 / fv))
-                        if fn == "freq_agg"
-                        else max(256, int(fv))
-                    )
-                    freq_aggs[alias] = {
-                        "value": _rw(args[1].strip(), ts),
-                        "capacity": cap,
-                    }
-                    if fn == "topn_agg":
-                        # the toolkit's topn(agg) without an explicit n
-                        # serves the agg's own n — record it
-                        freq_aggs[alias]["n"] = int(fv)
-                else:
-                    raise ValueError(f"{fn}([min_freq | n,] value)")
-                continue
-            if fn == "tdigest":
-                # toolkit tdigest(size, value): size is the compression
-                # (max centroids) — the rank-error percentile partial,
-                # percentile_agg/uddsketch's sibling
-                if len(args) != 2:
-                    raise ValueError("tdigest(size, value)")
-                nk, nv = _literal_of(args[0])
-                if nk != "int" or int(nv) < 2:
-                    raise ValueError(
-                        "tdigest size must be an integer literal >= 2"
-                    )
-                tdigest_aggs[alias] = {
-                    "value": _rw(args[1].strip(), ts),
-                    "delta": int(nv),
-                }
-                continue
-            if fn in ("max_n", "min_n"):
-                if len(args) != 2:
-                    raise ValueError(f"{fn}(value, n)")
-                nk, nv = _literal_of(args[1])
-                if nk != "int":
-                    raise ValueError(f"{fn} n must be an integer literal")
-                maxn_aggs[alias] = {
-                    "value": _rw(args[0].strip(), ts),
-                    "n": int(nv),
-                    "desc": fn == "max_n",
-                }
-                continue
-            if fn in ("max_n_by", "min_n_by"):
-                # toolkit max_n_by(value, data, n): the top-n values
-                # with an accompanying payload per entry
-                if len(args) != 3:
-                    raise ValueError(f"{fn}(value, data, n)")
-                nk, nv = _literal_of(args[2])
-                if nk != "int":
-                    raise ValueError(f"{fn} n must be an integer literal")
-                maxn_aggs[alias] = {
-                    "value": _rw(args[0].strip(), ts),
-                    "by": _rw(args[1].strip(), ts),
-                    "n": int(nv),
-                    "desc": fn == "max_n_by",
-                }
-                continue
-            if len(args) != 2:
-                raise ValueError(f"{fn}(ts, value)")
-            dest = counters if fn == "counter_agg" else gauges
-            dest[alias] = {"value": _rw(args[1].strip(), ts)}
-            # the ordering argument must be the cagg's time column —
-            # validated against the time_bucket call after the SELECT
-            # loop (the bucket item may appear later in the list).
-            # NOTE: SQL partials order by time only; equal-timestamp
-            # rows need the Python API's tiebreak= option.
-            partial_time_args.append(
-                (fn, alias, args[0].strip().split(".")[-1].strip())
-            )
-            continue
-        skh = _head_call(expr, {"percentile_agg", "uddsketch", "rollup"})
-        if skh:
-            # toolkit sketch aggregates inside the cagg definition —
-            # materialize a mergeable DDSketch STATE instead of a
-            # finished number (caggs.py sketches=; the
-            # percentile_agg-inside-a-cagg idiom). rollup(col) defines a
-            # hierarchical child over a parent sketch cagg's mat column.
-            if alias is None:
-                raise ValueError(f"cagg sketch needs AS alias: {item!r}")
-            fn, args = skh
-            if fn == "percentile_agg":
-                if len(args) != 1:
-                    raise ValueError("percentile_agg(value)")
-                sketches[alias] = {"value": _rw(args[0].strip(), ts)}
-            elif fn == "uddsketch":
-                # uddsketch(size, max_error, value): size is the
-                # toolkit's bucket cap — log-bucket maps are inherently
-                # bounded here, so only max_error carries over
-                if len(args) != 3:
-                    raise ValueError("uddsketch(size, max_error, value)")
-                sketches[alias] = {
-                    "value": _rw(args[2].strip(), ts),
-                    "alpha": float(args[1]),
-                }
-            else:  # rollup — family resolved against the parent cagg
-                # after the FROM clause is known (sketch kept as the
-                # fallback for pre-r11 compatibility)
+            fn, args = ph
+            if fn == "rollup":
                 if len(args) != 1:
                     raise ValueError("rollup(partial_column)")
                 rollups[alias] = args[0].strip().split(".")[-1]
+                continue
+            spec, targ = _partial_spec(
+                fn, args, lambda a: _rw(a.strip(), ts)
+            )
+            partials[FAMILY_OF_SQL_FN[fn].key][alias] = spec
+            if targ is not None:
+                partial_time_args.append((fn, alias, targ))
             continue
         head = _head_call(expr, {"time_bucket"})
         if head:
@@ -1987,64 +1882,11 @@ def run_create_cagg(ts, m) -> DataFrame:
     ht_name, ht_alias, join_tbl, j_alias, join_cond = jm.groups()
     quals = {q for q in (ht_name, ht_alias, join_tbl, j_alias) if q}
     aggs = {k: _strip_quals(v, quals) for k, v in aggs.items()}
-    sketches = {
-        k: (
-            {**v, "value": _strip_quals(v["value"], quals)}
-            if "value" in v
-            else v
-        )
-        for k, v in sketches.items()
-    }
-    counters = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in counters.items()
-    }
-    gauges = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in gauges.items()
-    }
-    stats_aggs = {
-        k: {
-            **v,
-            "value": _strip_quals(v["value"], quals),
-            **(
-                {"y": _strip_quals(v["y"], quals)} if "y" in v else {}
-            ),
-        }
-        for k, v in stats_aggs.items()
-    }
-    time_weights = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in time_weights.items()
-    }
-    state_aggs = {
-        k: {**v, "state": _strip_quals(v["state"], quals)}
-        for k, v in state_aggs.items()
-    }
-    freq_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in freq_aggs.items()
-    }
-    maxn_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in maxn_aggs.items()
-    }
-    tdigest_aggs = {
-        k: {**v, "value": _strip_quals(v["value"], quals)}
-        for k, v in tdigest_aggs.items()
-    }
-    candlesticks = {
-        k: {
-            **v,
-            "price": _strip_quals(v["price"], quals),
-            **(
-                {"volume": _strip_quals(v["volume"], quals)}
-                if "volume" in v
-                else {}
-            ),
-        }
-        for k, v in candlesticks.items()
-    }
+    for fam in FAMILIES.values():
+        for spec in partials[fam.key].values():
+            for k in fam.exprs:
+                if k in spec:
+                    spec[k] = _strip_quals(spec[k], quals)
     join = None
     if join_tbl:
         how = "left" if re.search(r"\bleft\b", from_clause, re.I) else "inner"
@@ -2064,34 +1906,16 @@ def run_create_cagg(ts, m) -> DataFrame:
         if crow is None:
             raise
         ht = ts.get_hypertable(crow["mat_table"])
-    if rollups:
-        # route each rollup(col) to the family the PARENT cagg stores
-        # that column under (sketch fallback keeps pre-r11 behavior for
-        # hll-in-aggs parents)
-        prow = ts.catalog.continuous_agg.find_one(mat_table=ht.name) or {}
-        fam_dicts = {
-            "sketches": sketches,
-            "counters": counters,
-            "gauges": gauges,
-            "stats_aggs": stats_aggs,
-            "time_weights": time_weights,
-            "candlesticks": candlesticks,
-            "state_aggs": state_aggs,
-            "freq_aggs": freq_aggs,
-            "maxn_aggs": maxn_aggs,
-            "heartbeat_aggs": heartbeat_aggs,
-            "tdigest_aggs": tdigest_aggs,
-        }
-        for alias, src_col in rollups.items():
-            fam = next(
-                (
-                    f
-                    for f in fam_dicts
-                    if src_col in (prow.get(f) or {})
-                ),
-                "sketches",
+    prow = ts.catalog.continuous_agg.find_one(mat_table=ht.name) or {}
+    for alias, src_col in rollups.items():
+        # the child stores src_col's family, as the PARENT cagg does
+        fam = family_of(prow, src_col)
+        if fam is None:
+            raise ValueError(
+                f"rollup({src_col}): the FROM cagg has no partial "
+                f"column of that name"
             )
-            fam_dicts[fam][alias] = {"rollup_of": src_col}
+        partials[fam[0].key][alias] = {"rollup_of": src_col}
     cagg = ts.create_cagg(
         name,
         ht,
@@ -2103,17 +1927,7 @@ def run_create_cagg(ts, m) -> DataFrame:
         where=where,
         join=join,
         materialized_only=mat_only,
-        sketches=sketches or None,
-        counters=counters or None,
-        gauges=gauges or None,
-        stats_aggs=stats_aggs or None,
-        time_weights=time_weights or None,
-        candlesticks=candlesticks or None,
-        state_aggs=state_aggs or None,
-        freq_aggs=freq_aggs or None,
-        maxn_aggs=maxn_aggs or None,
-        heartbeat_aggs=heartbeat_aggs or None,
-        tdigest_aggs=tdigest_aggs or None,
+        **{k: v or None for k, v in partials.items()},
     )
     if not (m.group("data") or "").strip():  # WITH DATA is the PG default
         cagg.refresh()

@@ -104,6 +104,8 @@ def dimensions(ts) -> DataFrame:
 
 def continuous_aggregates(ts) -> DataFrame:
     """``timescaledb_information.continuous_aggregates`` (sql/views.sql:182)."""
+    from .caggs import _SKETCHES, FAMILIES
+
     rows = []
     for c in ts.catalog.continuous_agg.read():
         wm = ts.catalog.cagg_watermark.find_one(cagg_id=c["id"])
@@ -117,18 +119,12 @@ def continuous_aggregates(ts) -> DataFrame:
                 "materialization_hypertable_name": c["mat_table"],
                 # round 10: mat table stores mergeable partials for
                 # these columns (the toolkit finalized=false idiom)
-                "sketch_columns": sorted(c.get("sketches") or {}),
+                "sketch_columns": sorted(c.get(_SKETCHES.key) or {}),
                 "partial_columns": sorted(
-                    list(c.get("counters") or {})
-                    + list(c.get("gauges") or {})
-                    + list(c.get("stats_aggs") or {})
-                    + list(c.get("time_weights") or {})
-                    + list(c.get("candlesticks") or {})
-                    + list(c.get("state_aggs") or {})
-                    + list(c.get("freq_aggs") or {})
-                    + list(c.get("maxn_aggs") or {})
-                    + list(c.get("heartbeat_aggs") or {})
-                    + list(c.get("tdigest_aggs") or {})
+                    col
+                    for f in FAMILIES.values()
+                    if f is not _SKETCHES
+                    for col in (c.get(f.key) or {})
                 ),
             }
         )
